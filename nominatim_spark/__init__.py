@@ -2,7 +2,7 @@
 
 Re-creates the query semantics and data model of the reference geocoder
 (ehtick/Nominatim: PostgreSQL/PostGIS index build + Python search API) as an
-idiomatic Spark engine: DataFrame/SQL plans, broadcast + salted hash joins on
+idiomatic Spark engine: DataFrame/SQL plans, broadcast hash joins on
 hierarchical grid-cell keys, vectorized pandas/Arrow UDFs for geometry and
 text normalization, per-stage parquet checkpoints with lineage manifests.
 

@@ -1,1 +1,2 @@
-"""Engine operators: spatial joins, dedup, similarity, text analysis."""
+"""Engine operators: spatial joins on grid-cell keys (cover, within-distance,
+kNN) and standalone salting helpers for skewed keys (``skew``)."""

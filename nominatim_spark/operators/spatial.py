@@ -8,7 +8,7 @@ cell-cover pattern:
     polygon side:  geometry -> covering cell set at res r -> explode
     point   side:  (lon, lat) -> cell at res r
     join    :      equi-join on cell  (broadcast if the polygon side is
-                   small; salted sort-merge otherwise)
+                   small; sort-merge otherwise)
     recheck :      exact geometry predicate in a vectorized pandas UDF
 
 and kNN becomes iterative ring expansion (the reference's doubling-radius
@@ -18,10 +18,8 @@ getNearestRoadPlaceId partition-functions.sql:285-313).
 Scale notes (100 TB design):
 * The polygon side of admin-boundary joins (countries, cities) is small
   relative to the point side — always broadcast the exploded cover.
-* Point cells inherit the data's skew (cities are hot).  The cover-join
-  carries an optional ``salt`` that splits hot cells into ``n_salt``
-  sub-keys on the big side and replicates the broadcast side; with AQE skew
-  join enabled this is belt-and-braces.
+* Point cells inherit the data's skew (cities are hot); AQE skew-join
+  splitting (on in the session config) handles hot cells.
 * The exact recheck only sees cover-join survivors — the cover at
   ``res_for_extent`` bounds candidate fan-out per polygon.
 """
@@ -437,14 +435,15 @@ def knn_join(
 ) -> DataFrame:
     """Nearest-candidate join by iterative cell-ring expansion (J6).
 
-    For each point row, finds the single nearest candidate by planar squared
-    euclidean distance (ties broken by ``cand_key``), expanding the search
-    disk 1 -> 2 -> 4 ... cells until the best match is provably nearest
-    (found distance <= (k-1) * cell_size — anything outside the disk is
-    farther).  Unresolved points escalate to the next round; resolved points
-    exit, so each round's join only carries the remainder — this is the
-    distributed analog of the reference's per-row doubling-radius loop
-    (reverse.py:160-240), with the loop over *rounds* instead of rows.
+    For each distinct ``point_key``, finds the single nearest candidate by
+    planar squared euclidean distance (ties broken by ``cand_key``),
+    expanding the search disk 1 -> 2 -> 4 ... cells until the best match is
+    provably nearest (found distance <= (k-1) * cell_size — anything outside
+    the disk is farther).  Unresolved points escalate to the next round;
+    resolved points exit, so each round's join only carries the remainder —
+    this is the distributed analog of the reference's per-row
+    doubling-radius loop (reverse.py:160-240), with the loop over *rounds*
+    instead of rows.
 
     Returns columns: point_key, cand_key, dist2.
     """
@@ -462,14 +461,16 @@ def knn_join(
     # (a filter over that round's localCheckpoint leaf) replaces the
     # remaining.isEmpty() probe, whose anti-join had to be re-planned
     # from scratch every round — at sf0.1 the planning gaps, not the
-    # tasks, dominate this operator (profiled: 24 jobs of <0.2s each)
+    # tasks, dominate this operator (profiled: 24 jobs of <0.2s each).
+    # Counted in distinct point keys, the unit each round resolves, so
+    # duplicate keys cannot leave a phantom remainder.
     n_remaining: int | None = None
 
     while k <= k_cells_max:
         if n_remaining == 0:
             break
         if n_remaining is None:
-            n_remaining = remaining.count()
+            n_remaining = remaining.select(point_key).distinct().count()
             if n_remaining == 0:
                 break
         # explode each point into its disk(k) of cells — JVM-side

@@ -27,7 +27,7 @@ candidates), street/place sides become JVM-generated bbox cover cells
 broadcasts.  Nothing unbounded is ever collected to the driver; the one
 pandas-side exception is the country polygon table (bounded at ~250 rows).
 The POI parenting join is the skew-sensitive one (city cells are hot) and
-inherits AQE skew handling plus the salted cover-join helper.
+relies on AQE skew-join handling.
 """
 
 from __future__ import annotations

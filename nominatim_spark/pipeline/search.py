@@ -1516,7 +1516,16 @@ def score_hits(
 
 
 def geocode(spark, idx: IndexTables, queries: DataFrame, **kw) -> DataFrame:
-    """Batch geocode: one row per query_id (best match, may be absent).
+    """Batch geocode: the best match for each input ``(query_id, text)`` row.
+
+    The output has one row per input row whose text found a match; rows
+    without a match and rows whose text is NULL yield no row.  A
+    ``query_id`` that appears with several texts (a page with several
+    address mentions) gets one row per text, so no mention is dropped.
+
+    The call is eager: it runs the upstream ``queries`` plan, and the
+    parse, plan and candidate stages of :func:`score_hits`, before it
+    returns.  The returned frame holds the remaining work.
 
     Final ranking: lowest penalty, then importance desc, then stable id.
     min_by over an orderable struct = one hash aggregation (with map-side
@@ -1538,9 +1547,11 @@ def geocode(spark, idx: IndexTables, queries: DataFrame, **kw) -> DataFrame:
     # materialize the (id, text) projection once: both the distinct and
     # the final attach join read it, so an expensive upstream (e.g. the
     # page-extraction mapInPandas) runs exactly once
-    qsel = queries.select(
-        "query_id", F.col(text_col).alias("_qtext")
-    ).localCheckpoint(eager=True)
+    qsel = (
+        queries.select("query_id", F.col(text_col).alias("_qtext"))
+        .filter(F.col("_qtext").isNotNull())
+        .localCheckpoint(eager=True)
+    )
     # right-size the two consumers below from the MEASURED batch size:
     # they do trivial per-row work (hash, broadcast-probe), so ~1M rows
     # per task (the guide's ~100 MB partition band for short rows) is

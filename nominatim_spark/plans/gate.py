@@ -3,7 +3,7 @@
 Each entry implements one operator family from SURVEY.md §2 using the
 engine's real machinery on the Spark side (cell encoding UDFs, cover joins,
 ring-expansion kNN, posting-table semijoins, fixed-point centroids,
-minhash/LSH dedup ...), paired with a plain ANSI-SQL oracle that DuckDB runs
+ranking folds ...), paired with a plain ANSI-SQL oracle that DuckDB runs
 over the same parquet views.  The driver compares row count + schema +
 order-insensitive value hash, so:
 
@@ -33,284 +33,13 @@ from nominatim_spark.plans import synthgeo as sg
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
+    "orders", "lineitem", "documents",
 ]
 
 
-def _input_bytes(spark: SparkSession, path: str) -> int | None:
-    """Total bytes under ``path`` via the Hadoop FS API (works for any
-    supported filesystem, ~1 ms for local paths)."""
-    try:
-        jvm = spark._jvm
-        hp = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hp.getFileSystem(spark._jsc.hadoopConfiguration())
-        return int(fs.getContentSummary(hp).getLength())
-    except Exception:  # noqa: BLE001 — unknown FS/missing path: skip fan-out
-        return None
-
-
-# fan-out only inputs big enough that serial per-row work matters; tiny
-# inputs are cheaper scanned as-is (the repartition exchange + its AQE
-# stage cost more than the serial work they spread — measured A/B,
-# tools/ab_fanout.py).  Above the cap the natural splits already occupy
-# the cluster well enough that shuffling the whole input to gain the
-# last factor of parallelism costs more than it saves.
-_FAN_OUT_MIN_BYTES = 256 * 1024
-_FAN_OUT_MAX_BYTES = 256 * 1024 * 1024
-
-
-def load(spark: SparkSession, sf_dir: str, name: str,
-         fan_out: bool = False, min_bytes: int = _FAN_OUT_MIN_BYTES,
-         ) -> DataFrame:
-    """Read a testdata table; optionally fan out an unsplittable scan.
-
-    The driver's tables are single-file single-row-group parquet — an
-    UNSPLITTABLE input: the scan yields one task regardless of
-    ``maxPartitionBytes``, so every per-row operator fused into the scan
-    stage (tokenize+explode, partial aggregation, pandas UDFs) runs
-    serially on one core.  Guide §2.5 ("input skew: one huge
-    unsplittable file ... repartition immediately after the read"): with
-    ``fan_out=True``, when the scan would produce fewer splits than the
-    cluster has cores, a round-robin repartition immediately after the
-    read spreads the per-row work across all cores for the price of
-    shuffling an input that is by definition small.  Opt-in per query:
-    the interleaved A/B (tools/ab_fanout.py) shows the extra exchange
-    LOSES wherever per-row work is light, and wins only for the
-    regex-tokenization scans.  At production scale the split condition
-    is false (millions of splits) and this is a no-op either way — the
-    decision derives from the measured input size, not a local[32] tune.
-    """
-    import os
-
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if not fan_out or os.environ.get("SPARK_GRAFT_FANOUT", "1") == "0":
-        return df
-    nbytes = _input_bytes(spark, path)
-    if nbytes is None or not (min_bytes <= nbytes <= _FAN_OUT_MAX_BYTES):
-        return df
-    try:
-        max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    except ValueError:  # byte-string form ("128m") — parse via the JVM util
-        max_split = int(
-            spark._jvm.org.apache.spark.network.util.JavaUtils
-            .byteStringAsBytes(
-                spark.conf.get("spark.sql.files.maxPartitionBytes"))
-        )
-    par = spark.sparkContext.defaultParallelism
-    est_splits = max(1, -(-nbytes // max_split))
-    if est_splits < par:
-        return df.repartition(par)
-    return df
-
-
-# ---------------------------------------------------------------- relational
-
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-shaped scan+agg baseline (SURVEY §2.4 A-agg analog).
-
-    Filter pushes to the parquet scan; aggregation is map-side partial.
-    DECIMAL sums keep the result order-independent and oracle-exact.
-    """
-    # fan-out crossover at 32 MB: below it (sf0.1's 11 MB) the interleaved
-    # A/B picked the plain serial scan — the agg is cheap enough that the
-    # repartition exchange loses; one SF up the serial decimal aggregation
-    # dominates and the fan-out wins
-    li = load(spark, sf_dir, "lineitem", fan_out=True,
-              min_bytes=32 * 1024 * 1024)
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(20,4)")).cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(24,6)")).cast("double").alias("sum_base_price"),
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(24,6)")
-            ).cast("double").alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-Q1_SQL = """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(20,4))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(24,6))) AS DOUBLE) AS sum_base_price,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(24,6))) AS DOUBLE) AS sum_disc_price,
-       COUNT(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join + group + deterministic top-k (J4 + T1 pattern)."""
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    li = load(spark, sf_dir, "lineitem", fan_out=True,
-              min_bytes=32 * 1024 * 1024)
-    rev = (
-        li.groupBy("l_orderkey")
-        .agg(
-            F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(24,6)")
-            ).alias("rev_dec")
-        )
-    )
-    return (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(rev, orders.o_orderkey == rev.l_orderkey)
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(
-            F.col("o_orderkey"),
-            F.col("c_custkey"),
-            F.col("rev_dec").cast("double").alias("revenue"),
-        )
-        .orderBy(F.col("rev_dec").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-
-
-Q_TOP_ORDERS_SQL = """
-WITH rev AS (
-  SELECT l_orderkey, SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(24,6))) AS rev_dec
-  FROM lineitem GROUP BY l_orderkey
-)
-SELECT o_orderkey, c_custkey, CAST(rev_dec AS DOUBLE) AS revenue
-FROM orders JOIN customer ON o_custkey = c_custkey JOIN rev ON o_orderkey = rev.l_orderkey
-WHERE o_orderpriority = '1-URGENT'
-ORDER BY rev_dec DESC, o_orderkey LIMIT 10
-"""
-
-
-def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers with no URGENT order — left_anti (P4 exclusion / U5)."""
-    cust = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") == "1-URGENT"
-    )
-    return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-Q_ANTI_SQL = """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-"""
-
-
-def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers with at least one 'F' order — left_semi (J15 EXISTS)."""
-    cust = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi").select(
-        "c_custkey"
-    )
-
-
-Q_SEMI_SQL = """
-SELECT c_custkey FROM customer
-WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-"""
-
-
-def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window top-k per group (W4: row_number over partition, LIMIT 1-per-set)."""
-    orders = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
-    return (
-        orders.withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select("o_orderpriority", "o_orderkey", "rk")
-    )
-
-
-Q_TOPK_SQL = """
-SELECT o_orderpriority, o_orderkey, rk FROM (
-  SELECT o_orderpriority, o_orderkey,
-         ROW_NUMBER() OVER (PARTITION BY o_orderpriority
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rk
-  FROM orders) t
-WHERE rk <= 5
-"""
-
-
-def q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5-minute tumbling-window aggregation over the events table.
-
-    Batch form of the streaming windowed agg (SURVEY §2.9); bucket is epoch
-    arithmetic so the oracle matches bit-for-bit.
-    """
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.withColumn("bucket", (F.unix_timestamp("ts") / 300).cast("long") * 300)
-        .groupBy("bucket", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(24,6)")).cast("double").alias("sum_value"),
-        )
-    )
-
-
-Q_EVENTS_SQL = """
-SELECT CAST(FLOOR(epoch(ts) / 300) AS BIGINT) * 300 AS bucket, event_type,
-       COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(24,6))) AS DOUBLE) AS sum_value
-FROM events GROUP BY 1, 2
-"""
-
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization over the events stream (§2.9 companion —
-    the batch form of session windows: a >30-minute silence starts a new
-    session).  lag window + cumulative sum of boundaries; per session:
-    event count, span seconds."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # microsecond-exact epoch arithmetic: both engines carry the same
-    # int64 micros, so boundaries and spans are bit-identical
-    sess = (
-        ev.withColumn("_prev", F.lag("ts").over(w))
-        .withColumn(
-            "_new",
-            (F.col("_prev").isNull()
-             | (F.expr("unix_micros(CAST(ts AS TIMESTAMP)) - unix_micros(CAST(_prev AS TIMESTAMP))")
-                > 1800 * 1_000_000)).cast("int"),
-        )
-        .withColumn("session_seq", F.sum("_new").over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ))
-    )
-    return sess.groupBy("user_id", "session_seq").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.expr("unix_micros(CAST(MAX(ts) AS TIMESTAMP))"
-               " - unix_micros(CAST(MIN(ts) AS TIMESTAMP))").alias("span_us"),
-    )
-
-
-Q_SESSIONIZE_SQL = """
-WITH marked AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id, ts,
-         CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT)
-             AS session_seq
-  FROM marked
-)
-SELECT user_id, session_seq, COUNT(*) AS n_events,
-       CAST(epoch_us(MAX(ts)) - epoch_us(MIN(ts)) AS BIGINT) AS span_us
-FROM sess GROUP BY user_id, session_seq
-"""
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ------------------------------------------------------------------- spatial
@@ -523,11 +252,15 @@ FROM pts GROUP BY c_nationkey
 """
 
 
-# ----------------------------------------------------- tokens / text / dedup
+# ------------------------------------------------------------ tokens / text
 
 _TOKENIZE = "filter(split(regexp_replace(lower(text), '[^a-z ]+', ' '), ' '), w -> w <> '')"
 _DUCK_TOKENIZE = (
     "list_filter(string_split(regexp_replace(lower(text), '[^a-z ]+', ' ', 'g'), ' '), "
+    "w -> w <> '')"
+)
+_DUCK_TOKS = (
+    "list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]+', ' ', 'g'), ' '), "
     "w -> w <> '')"
 )
 
@@ -535,7 +268,7 @@ _DUCK_TOKENIZE = (
 def q_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-frequency statistics (A1 — icu_tokenizer word stats,
     explode + groupBy + deterministic top-100)."""
-    docs = load(spark, sf_dir, "documents", fan_out=True)
+    docs = load(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(F.expr(_TOKENIZE)).alias("word"))
         .groupBy("word")
@@ -599,414 +332,6 @@ Q_LOOKUP_ANY_SQL = f"""
 SELECT DISTINCT doc_id
 FROM documents, LATERAL unnest({_DUCK_TOKENIZE}) AS t(w)
 WHERE w IN {_LOOKUP_ANY!r}
-"""
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact near-duplicate grouping by content hash (training-data dedup,
-    hash-groupBy flavor): docs sharing a 40-char prefix hash, with the
-    group's canonical (min) doc_id."""
-    docs = load(spark, sf_dir, "documents")
-    hashed = docs.select(
-        "doc_id", F.md5(F.expr("substr(text, 1, 40)")).alias("h")
-    )
-    w = Window.partitionBy("h")
-    return (
-        hashed.withColumn("canonical_id", F.min("doc_id").over(w))
-        .withColumn("group_size", F.count(F.lit(1)).over(w))
-        .filter(F.col("group_size") > 1)
-        .select("doc_id", "canonical_id", "group_size")
-    )
-
-
-Q_DEDUP_SQL = """
-SELECT doc_id, canonical_id, group_size FROM (
-  SELECT doc_id,
-         MIN(doc_id) OVER (PARTITION BY md5(substr(text, 1, 40))) AS canonical_id,
-         COUNT(*) OVER (PARTITION BY md5(substr(text, 1, 40))) AS group_size
-  FROM documents) t
-WHERE group_size > 1
-"""
-
-
-def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate pairs (training-data near-dedup).
-
-    Character 12-gram shingles at stride 7; per-doc minhash = lexicographic
-    min of md5(seed:shingle) per seed (portable across engines); two bands
-    of two hashes; candidate pair = same band value, doc_a < doc_b.
-    """
-    # shingle generation + 4 md5 per shingle is the heaviest per-row work
-    # in the headline set: fan the scan out once the document table grows
-    # past the measured crossover (plain wins at sf0.1's 0.6 MB)
-    docs = load(spark, sf_dir, "documents", fan_out=True,
-                min_bytes=2 * 1024 * 1024)
-    sh = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, greatest(length(text) - 11, 1), 7), "
-                "i -> substr(text, i, 12))"
-            )
-        ).alias("shingle"),
-    )
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("shingle")))).alias(f"h{s}")
-            for s in (1, 2, 3, 4)
-        ]
-    )
-    b1 = sig.select("doc_id", F.concat("h1", "h2").alias("band"))
-    b2 = sig.select("doc_id", F.concat("h3", "h4").alias("band"))
-    bands = b1.unionByName(b2)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates()
-    )
-
-
-Q_MINHASH_SQL = """
-WITH sh AS (
-  SELECT doc_id, substr(text, CAST(u.i AS INT), 12) AS shingle
-  FROM documents, LATERAL unnest(generate_series(1, greatest(length(text) - 11, 1), 7)) AS u(i)
-), sig AS (
-  SELECT doc_id,
-         MIN(md5('1:' || shingle)) AS h1, MIN(md5('2:' || shingle)) AS h2,
-         MIN(md5('3:' || shingle)) AS h3, MIN(md5('4:' || shingle)) AS h4
-  FROM sh GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, h1 || h2 AS band FROM sig
-  UNION ALL
-  SELECT doc_id, h3 || h4 AS band FROM sig
-)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id
-"""
-
-
-def q_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k ANN baseline over the embeddings table.
-
-    Query vector = embedding of vec_id 0; sequential-fold double dot
-    product; ranking on ROUND(cos, 6) so both engines cut the same top-10.
-    """
-    emb = load(spark, sf_dir, "embeddings")
-    qvec = emb.filter("vec_id = 0").select("embedding").head()[0]
-    qlit = F.array(*[F.lit(float(v)) for v in qvec])
-    dot = F.expr(
-        "aggregate(zip_with(embedding, qv, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    norm = F.expr(
-        "sqrt(aggregate(transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
-    )
-    qnorm = F.expr(
-        "sqrt(aggregate(transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v))"
-    )
-    return (
-        emb.filter("vec_id <> 0")
-        .withColumn("qv", qlit)
-        .withColumn("cos_r", F.round(dot / (norm * qnorm), 6))
-        .orderBy(F.col("cos_r").desc(), F.col("vec_id"))
-        .limit(10)
-        .select("vec_id", "cos_r")
-    )
-
-
-Q_EMBED_SQL = """
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-     scored AS (
-  SELECT vec_id,
-         ROUND(
-           list_sum(list_transform(list_zip(e.embedding, q.qv),
-                    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(q.qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS cos_r
-  FROM embeddings e CROSS JOIN q
-  WHERE vec_id <> 0)
-SELECT vec_id, cos_r FROM scored ORDER BY cos_r DESC, vec_id LIMIT 10
-"""
-
-
-# --------------------------------------------- text analysis & dedup (batch 2)
-
-_DUCK_TOKS = (
-    "list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]+', ' ', 'g'), ' '), "
-    "w -> w <> '')"
-)
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text-analysis bundle: token stats + quality + language-ID +
-    rolling-hash fingerprint (operators/textstats.py), all JVM-side."""
-    from nominatim_spark.operators import textstats as ts
-
-    docs = load(spark, sf_dir, "documents")
-    out = ts.with_token_stats(docs)
-    out = ts.with_quality_score(out)
-    out = ts.with_lang_id(out)
-    out = ts.with_fingerprint(out)
-    return out.select(
-        "doc_id", "n_tokens", "digit_ratio", "punct_ratio",
-        "quality", "lang_pred", "fingerprint",
-    )
-
-
-def _duck_hits(lang_words: list[str]) -> str:
-    arr = "[" + ", ".join(f"'{w}'" for w in lang_words) + "]"
-    return f"len(list_intersect(list_distinct({_DUCK_TOKS}), {arr}))"
-
-
-def _q_text_stats_sql() -> str:
-    from nominatim_spark.operators.textstats import (
-        FP_BASE, FP_MOD, HASH_HEX, LANG_STOPWORDS)
-
-    hits = {l: _duck_hits(ws) for l, ws in LANG_STOPWORDS.items()}
-    best = "greatest(" + ", ".join(f"h_{l}" for l in sorted(hits)) + ")"
-    lang_case = "CASE " + " ".join(
-        f"WHEN h_{l} = {best} AND {best} > 0 THEN '{l}'"
-        for l in sorted(hits)
-    ) + " ELSE 'und' END"
-    return f"""
-WITH t AS (
-  SELECT doc_id, text, {_DUCK_TOKS} AS toks,
-         {hits['en']} AS h_en, {hits['de']} AS h_de,
-         {hits['fr']} AS h_fr, {hits['es']} AS h_es
-  FROM documents)
-SELECT doc_id,
-  CAST(len(toks) AS BIGINT) AS n_tokens,
-  ROUND(length(regexp_replace(text, '[^0-9]', '', 'g'))
-        / greatest(length(text), 1), 6) AS digit_ratio,
-  ROUND(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-        / greatest(length(text), 1), 6) AS punct_ratio,
-  ROUND(0.4 * least(len(toks) / 100.0, 1.0)
-      + 0.3 * least(h_en / 5.0, 1.0)
-      + 0.3 * (len(list_distinct(toks)) / greatest(len(toks), 1)), 6) AS quality,
-  {lang_case} AS lang_pred,
-  list_reduce(
-    list_prepend(CAST(0 AS BIGINT),
-      list_transform(toks,
-        w -> CAST('0x' || substr(md5(w), 1, {HASH_HEX}) AS BIGINT))),
-    (acc, x) -> (acc * {FP_BASE} + x) % {FP_MOD}) AS fingerprint
-FROM t
-"""
-
-
-def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup candidate pairs (dedup family, operators/dedup.py)."""
-    from nominatim_spark.operators.dedup import simhash_pairs
-
-    return simhash_pairs(load(spark, sf_dir, "documents"), max_hamming=3)
-
-
-def _q_simhash_sql() -> str:
-    from nominatim_spark.operators.dedup import SIMHASH_BITS
-
-    votes = ", ".join(
-        f"SUM(((h >> {b}) & 1) * 2 - 1) AS v{b}" for b in range(SIMHASH_BITS)
-    )
-    sig = " + ".join(
-        f"(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END)"
-        for b in range(SIMHASH_BITS)
-    )
-    return f"""
-WITH toks AS (
-  SELECT doc_id, t.tok FROM documents,
-         LATERAL unnest(list_distinct({_DUCK_TOKS})) AS t(tok)
-), hashed AS (
-  SELECT doc_id, CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) AS h FROM toks
-), votes AS (
-  SELECT doc_id, {votes} FROM hashed GROUP BY doc_id
-), sigs AS (
-  SELECT doc_id, CAST({sig} AS BIGINT) AS simhash FROM votes
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
-
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (dedup family)."""
-    from nominatim_spark.operators.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(
-        load(spark, sf_dir, "documents"), n=3, threshold=0.2
-    )
-
-
-Q_JACCARD_SQL = f"""
-WITH sh AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(toks[CAST(u.i AS INT):CAST(u.i AS INT) + 2], ' ') AS shingle
-  FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents) t,
-       LATERAL unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS u(i)
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       ROUND(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) AS jacc
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE ROUND(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) >= 0.2
-"""
-
-
-def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (brute baseline; the LSH
-    bucket variant is operators/dedup.embedding_lsh_buckets)."""
-    from nominatim_spark.operators.dedup import embedding_neardup_pairs
-
-    return embedding_neardup_pairs(
-        load(spark, sf_dir, "embeddings"), threshold=0.3
-    )
-
-
-Q_EMBED_NEARDUP_SQL = """
-WITH pairs AS (
-  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-         ROUND(
-           list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS cos_r
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-SELECT doc_a, doc_b, cos_r FROM pairs WHERE cos_r >= 0.3
-"""
-
-
-def q_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded SimHash pair join (the dedup scale path): per-band bucket
-    equi-join + exact hamming verify.  The oracle is the BRUTE-force SQL —
-    the pigeonhole band split (max_hamming+1 bands) makes the banded result
-    provably identical, and this row proves it on real data."""
-    from nominatim_spark.operators.dedup import simhash_pairs_banded
-
-    return simhash_pairs_banded(load(spark, sf_dir, "documents"), max_hamming=3)
-
-
-def q_embed_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded sign-LSH embedding near-dup (the ANN-dedup scale path) over
-    the embeddings table augmented with rescaled copies (vec_id+100000,
-    vector*2 — cosine exactly 1 with the original).  Scaling preserves
-    every hyperplane-projection sign, so the planted duplicates are
-    *provably* caught by the bucket join; the exact-cosine verify then
-    matches the brute-force oracle bit-for-bit at threshold 0.99 (the
-    synthetic embeddings' natural pairs top out at cos 0.513)."""
-    from nominatim_spark.operators.dedup import embedding_neardup_lsh
-
-    emb = load(spark, sf_dir, "embeddings")
-    scaled = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.expr("transform(embedding, x -> x * CAST(2.0 AS FLOAT))")
-        .alias("embedding"),
-    )
-    return embedding_neardup_lsh(
-        emb.select("vec_id", "embedding").unionByName(scaled),
-        threshold=0.99, n_planes=16, n_bands=2,
-    )
-
-
-Q_EMBED_LSH_SQL = """
-WITH aug AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000,
-         list_transform(embedding, x -> CAST(x * CAST(2.0 AS FLOAT) AS FLOAT))
-  FROM embeddings
-), pairs AS (
-  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-         ROUND(
-           list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS cos_r
-  FROM aug a JOIN aug b ON a.vec_id < b.vec_id)
-SELECT doc_a, doc_b, cos_r FROM pairs WHERE cos_r >= 0.99
-"""
-
-
-def q_ann_top1_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch ANN: nearest neighbor for EVERY vector via the banded
-    sign-LSH candidate join + exact cosine rerank (the IVF/LSH scale path
-    for batch similarity search — one query vector per row, never an
-    all-pairs product).  Over the augmented set (rescaled copies), each
-    original's true nearest is its exact-direction copy, which the bucket
-    join provably catches — so the LSH result equals the brute-force
-    oracle."""
-    from nominatim_spark.operators.dedup import embedding_neardup_lsh
-
-    emb = load(spark, sf_dir, "embeddings")
-    scaled = emb.select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.expr("transform(embedding, x -> x * CAST(2.0 AS FLOAT))")
-        .alias("embedding"),
-    )
-    aug = emb.select("vec_id", "embedding").unionByName(scaled)
-    pairs = embedding_neardup_lsh(
-        aug, threshold=0.99, n_planes=16, n_bands=2
-    )
-    # symmetrize, then best neighbor per ORIGINAL vector
-    sym = pairs.select("doc_a", "doc_b", "cos_r").unionByName(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"),
-            "cos_r",
-        )
-    ).filter(F.col("doc_a") < 100000)
-    w = Window.partitionBy("doc_a").orderBy(
-        F.col("cos_r").desc(), F.col("doc_b")
-    )
-    return (
-        sym.withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .select(F.col("doc_a").alias("vec_id"),
-                F.col("doc_b").alias("nn_id"), "cos_r")
-    )
-
-
-Q_ANN_TOP1_SQL = """
-WITH aug AS (
-  SELECT vec_id, embedding FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000,
-         list_transform(embedding, x -> CAST(x * CAST(2.0 AS FLOAT) AS FLOAT))
-  FROM embeddings
-), pairs AS (
-  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-         ROUND(
-           list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) AS cos_r
-  FROM aug a JOIN aug b ON a.vec_id <> b.vec_id
-  WHERE a.vec_id < 100000 AND
-        ROUND(
-           list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-            * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-           6) >= 0.99)
-SELECT vec_id, nn_id, cos_r FROM (
-  SELECT doc_a AS vec_id, doc_b AS nn_id, cos_r,
-         ROW_NUMBER() OVER (PARTITION BY doc_a
-                            ORDER BY cos_r DESC, doc_b) AS rn
-  FROM pairs) t
-WHERE rn = 1
 """
 
 
@@ -1285,43 +610,6 @@ def q_geocode_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "url", "qtext", "osm_type", "osm_id", "class", "type",
         "rank_address", "housenumber", "lon", "lat",
     )
-
-
-def q_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaccard pairs with the stop-shingle df-cap engaged (dedup family,
-    scale path).  The oracle applies the same cap, proving the capped
-    join equals the brute-force form wherever no shingle exceeds it."""
-    from nominatim_spark.operators.dedup import ngram_jaccard_pairs
-
-    return ngram_jaccard_pairs(
-        load(spark, sf_dir, "documents"), n=3, threshold=0.2, max_df=500
-    )
-
-
-Q_JACCARD_CAPPED_SQL = f"""
-WITH sh0 AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(toks[CAST(u.i AS INT):CAST(u.i AS INT) + 2], ' ') AS shingle
-  FROM (SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents) t,
-       LATERAL unnest(generate_series(1, greatest(len(toks) - 2, 0))) AS u(i)
-), sh AS (
-  SELECT sh0.* FROM sh0
-  JOIN (SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) <= 500) ok
-  USING (shingle)
-), sizes AS (
-  SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id
-), inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       ROUND(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) AS jacc
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE ROUND(n_inter / (sa.n_sh + sb.n_sh - n_inter), 6) >= 0.2
-"""
 
 
 def q_weigh_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1716,13 +1004,6 @@ FROM t1 LEFT JOIN refined ON refined.probe_id = t1.probe_id
 
 
 QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    "q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
-    "top_orders_join": (q_top_orders, Q_TOP_ORDERS_SQL),
-    "anti_join_no_orders": (q_anti_join, Q_ANTI_SQL),
-    "semi_join_has_f_order": (q_semi_join, Q_SEMI_SQL),
-    "topk_per_group": (q_topk_per_group, Q_TOPK_SQL),
-    "events_tumbling_window": (q_events_window, Q_EVENTS_SQL),
-    "events_sessionize": (q_sessionize, Q_SESSIONIZE_SQL),
     "cell_assign": (q_cell_assign, Q_CELL_SQL),
     "pip_cover_join": (q_pip_cover_join, Q_PIP_SQL),
     "knn_reverse": (q_knn_reverse, Q_KNN_SQL),
@@ -1732,18 +1013,7 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
     "word_freq": (q_word_freq, Q_WORD_FREQ_SQL),
     "lookup_all": (q_lookup_all, Q_LOOKUP_ALL_SQL),
     "lookup_any": (q_lookup_any, Q_LOOKUP_ANY_SQL),
-    "dedup_exact": (q_dedup_exact, Q_DEDUP_SQL),
-    "minhash_lsh_pairs": (q_minhash_lsh, Q_MINHASH_SQL),
-    "embed_topk_cosine": (q_embed_topk, Q_EMBED_SQL),
-    "text_stats": (q_text_stats, _q_text_stats_sql()),
-    "simhash_pairs": (q_simhash_pairs, _q_simhash_sql()),
-    "simhash_pairs_banded": (q_simhash_banded, _q_simhash_sql()),
-    "ngram_jaccard_pairs": (q_ngram_jaccard, Q_JACCARD_SQL),
-    "ngram_jaccard_capped": (q_ngram_jaccard_capped, Q_JACCARD_CAPPED_SQL),
     "weigh_search_fold": (q_weigh_search, Q_WEIGH_SEARCH_SQL),
-    "embed_neardup_pairs": (q_embed_neardup, Q_EMBED_NEARDUP_SQL),
-    "embed_neardup_lsh": (q_embed_neardup_lsh, Q_EMBED_LSH_SQL),
-    "ann_top1_lsh": (q_ann_top1_lsh, Q_ANN_TOP1_SQL),
     "pip_cover_join_dist": (q_pip_cover_join_dist, Q_PIP_SQL),
     "near_category_join": (q_near_category, Q_NEAR_CATEGORY_SQL),
     "window_prune_epsilon": (q_window_prune, Q_WINDOW_PRUNE_SQL),

@@ -10,7 +10,7 @@ matches the BASELINE.json input_hint schema exactly:
 ``(url string, warc_ts timestamp, html binary, text string, lang string)``.
 
 Skew is deliberate: ~30% of pages mention places in city 0 (the "hot cell"),
-so the extraction/geocode joins exercise the salting path.
+so the extraction/geocode joins exercise AQE skew handling.
 """
 
 from __future__ import annotations

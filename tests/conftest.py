@@ -6,7 +6,10 @@ import pytest
 @pytest.fixture(scope="session")
 def spark():
     # Smaller parallelism for test speed; the engine config is identical.
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    # SPARK_GRAFT_CPUS sets the core count (the tier-1 command passes the
+    # host's): each core can hold Python workers of ~130 MB next to the
+    # 12g JVM, so more threads than cores can exhaust a 16 GB host.
+    cpus = int(os.environ.setdefault("SPARK_GRAFT_CPUS", "8"))
     # one JVM serves the whole ~190-test session: a little extra heap on
     # top of the engine's pinned 10g absorbs the session-long tail of
     # uncollected localCheckpoint blocks (12g stays well below the
@@ -14,7 +17,7 @@ def spark():
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "12g")
     from nominatim_spark.session import get_spark
 
-    s = get_spark("nominatim_spark_tests", cpus=8, shuffle_partitions=8)
+    s = get_spark("nominatim_spark_tests", cpus=cpus, shuffle_partitions=8)
     yield s
 
 

@@ -126,6 +126,21 @@ def test_interpolation_lookup(spark, index):
     assert res["q3"].housenumber == "5"
 
 
+def test_geocode_row_per_text_and_null_text(spark, index):
+    """One row per matched (query_id, text) input row: a page with two
+    mentions keeps both answers, and a NULL text yields no row."""
+    idx, osmline = index
+    q = spark.createDataFrame(
+        [("page", f"{synth.street_name(0, 0)} 5, {synth.city_name(0)}"),
+         ("page", f"{synth.poi_name(0, 0)}, {synth.city_name(0)}"),
+         ("blank", None)],
+        "query_id string, qtext string",
+    )
+    rows = geocode(spark, idx, q, osmline=osmline).collect()
+    assert sorted((r.query_id, r.osm_type, r.osm_id) for r in rows) == [
+        ("page", "N", 100000), ("page", "N", 2000002)]
+
+
 def test_osmline_parity_normalization(index):
     _, osmline = index
     seg = osmline.filter("way_id = 5000000").head()

@@ -2,6 +2,8 @@
 bounded pandas/broadcast path (which stays as the correctness baseline for
 the country table)."""
 
+import time
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -10,7 +12,7 @@ from pyspark.sql import functions as F
 from nominatim_spark import grid
 from nominatim_spark.geometry import ops, wkb
 from nominatim_spark.operators.spatial import (
-    cover_cells_dist, explode_bbox_cells, point_in_polygon_join,
+    cover_cells_dist, explode_bbox_cells, knn_join, point_in_polygon_join,
     point_in_polygon_join_dist, polygon_cover)
 
 
@@ -120,35 +122,28 @@ def test_cover_cells_dist_full_cells_subset(spark):
     assert got_full == {int(c) for c, f in zip(want_cells, want_full) if f}
 
 
-def test_simhash_banded_equals_brute(spark):
-    from nominatim_spark.operators.dedup import (
-        simhash_pairs, simhash_pairs_banded)
+def test_knn_join_duplicate_point_keys(spark):
+    """Duplicate point keys give the deduplicated answer and run no extra
+    escalation rounds (each round is several Spark jobs)."""
+    pts = spark.createDataFrame(
+        [(i, i * 1.5, i * 0.5) for i in range(6)],
+        "point_id long, lon double, lat double")
+    cands = spark.createDataFrame(
+        [(100 + i, i * 1.5 + 0.1, i * 0.5) for i in range(6)],
+        "cand_id long, lon double, lat double")
+    sc = spark.sparkContext
 
-    docs = spark.createDataFrame(
-        pd.DataFrame({
-            "doc_id": range(30),
-            "text": [f"alpha beta gamma delta {i % 5} {i % 3}"
-                     for i in range(30)],
-        })
-    )
-    brute = {tuple(r) for r in simhash_pairs(docs, max_hamming=3).collect()}
-    banded = {
-        tuple(r) for r in simhash_pairs_banded(docs, max_hamming=3).collect()
-    }
-    assert banded == brute and len(brute) > 0
+    def run(points, group):
+        sc.setJobGroup(group, group)
+        try:
+            return sorted(map(tuple, knn_join(points, cands).collect()))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
 
-
-def test_embedding_lsh_catches_scaled_dups(spark):
-    from nominatim_spark.operators.dedup import embedding_neardup_lsh
-
-    rng = np.random.default_rng(3)
-    base = rng.normal(size=(40, 16)).astype(np.float32)
-    rows = [(i, base[i].tolist()) for i in range(40)]
-    rows += [(i + 1000, (base[i] * 2.0).tolist()) for i in range(40)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = embedding_neardup_lsh(
-        emb, threshold=0.99, n_planes=16, n_bands=2
-    ).collect()
-    got = {(r.doc_a, r.doc_b) for r in out}
-    assert got == {(i, i + 1000) for i in range(40)}
-    assert all(abs(r.cos_r - 1.0) < 1e-6 for r in out)
+    want = run(pts, "knn_uniq")
+    got = run(pts.unionByName(pts), "knn_dup")
+    assert got == want and len(want) == 6
+    time.sleep(1.0)  # the status tracker is fed asynchronously
+    jobs = {g: len(sc.statusTracker().getJobIdsForGroup(g))
+            for g in ("knn_uniq", "knn_dup")}
+    assert 0 < jobs["knn_dup"] <= jobs["knn_uniq"], jobs
