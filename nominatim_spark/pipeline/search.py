@@ -43,9 +43,11 @@ AQE skew handling covers hot city-name drive tokens.
 from __future__ import annotations
 
 import functools
+import itertools
 import re
 
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -498,6 +500,12 @@ def _parse_rows_default(q: str) -> tuple[tuple, ...]:
     return _parse_rows(q, None)
 
 
+_PARSE_COLS = ("assign_id", "name_norm", "hnr", "addr_norm", "postcode",
+               "apenalty", "adirection", "full_norm", "addr_phrases",
+               "near_key", "qual_key", "addr_spans", "addr_paths",
+               "addr_dflts", "pc_all")
+
+
 def _parse_batch(qtext: pd.Series, pre=None, table=None) -> pd.DataFrame:
     rows = []
     for pos, q in enumerate(qtext):
@@ -507,18 +515,52 @@ def _parse_batch(qtext: pd.Series, pre=None, table=None) -> pd.DataFrame:
                   else _parse_rows(q, table))
         for r in parsed:
             rows.append((pos,) + r)
-    return pd.DataFrame(
-        rows,
-        columns=["_pos", "assign_id", "name_norm", "hnr", "addr_norm",
-                 "postcode", "apenalty", "adirection", "full_norm",
-                 "addr_phrases", "near_key", "qual_key", "addr_spans",
-                 "addr_paths", "addr_dflts", "pc_all"],
-    )
+    return pd.DataFrame(rows, columns=["_pos", *_PARSE_COLS])
+
+
+# Lane flags: which conditional lanes of score_hits a batch needs.  The
+# parse ORs each Arrow batch's flags into an accumulator, so no probe job
+# runs after it; OR is idempotent, so a retried or recomputed task leaves
+# them exact.
+_SPLIT, _PC_NAME, _NEAR, _POI, _QUAL = 1, 2, 4, 8, 16
+
+
+def _lane_bits(p: pd.DataFrame) -> int:
+    named = p["name_norm"] != ""
+    near = p["near_key"].notna()
+    return int((p["adirection"] != 0).any() * _SPLIT
+               | (p["postcode"].notna() & named).any() * _PC_NAME
+               | (near & named).any() * _NEAR
+               | (near & ~named).any() * _POI
+               | p["qual_key"].notna().any() * _QUAL)
+
+
+class _OrByKey(AccumulatorParam):
+    """``{call key: lane bits}``, OR-merged.  One accumulator serves every
+    call of a session; each call pops its own key."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, more):
+        for k, bits in more.items():
+            acc[k] = acc.get(k, 0) | bits
+        return acc
+
+
+_CALL_KEYS = itertools.count()
+
+
+def _lane_flag_acc(sc):
+    acc = sc.__dict__.get("_nspark_lane_flags")
+    if acc is None:
+        acc = sc._nspark_lane_flags = sc.accumulator({}, _OrByKey())
+    return acc
 
 
 def parse_queries(queries: DataFrame, text_col: str = "qtext",
                   preprocessors: list | None = None,
-                  phrases=None) -> DataFrame:
+                  phrases=None, lane_flags=None) -> DataFrame:
     """Explode each query into its role assignments: one row per
     (query, assignment) with name_norm / hnr / addr_norm / postcode /
     apenalty / adirection columns (plus the full normalized query for the
@@ -527,12 +569,18 @@ def parse_queries(queries: DataFrame, text_col: str = "qtext",
     housenumber was split off — that reading dies before any posting join
     unless the digit really is an indexed name word).
 
+    A row whose text already occurred in the same Arrow batch is not
+    parsed again: it comes out once, with NULL assignment columns
+    (``assign_id`` NULL), and the search attaches the text's answer to it.
+
     ``preprocessors``: query-preprocessing chain config (see
     pipeline/preprocess.py) applied to each query text before
     assignment enumeration; defaults to the standard chain.
     ``phrases``: special-phrase table (pipeline/phrases.py) for the
     category readings; defaults to the built-in vocabulary.  The table
-    ships to the workers inside the task closure (a few KB)."""
+    ships to the workers inside the task closure (a few KB).
+    ``lane_flags``: optional ``(accumulator, key)`` pair (see
+    _lane_flag_acc); each batch ORs its _lane_bits in under ``key``."""
     from nominatim_spark.pipeline.preprocess import compile_chain
 
     pre = compile_chain(preprocessors)
@@ -548,107 +596,21 @@ def parse_queries(queries: DataFrame, text_col: str = "qtext",
 
     def run(batches):
         for pdf in batches:
-            parsed = _parse_batch(pdf[text_col], pre=pre, table=phrases)
-            base = pdf.reset_index(drop=True)
-            merged = base.iloc[parsed["_pos"]].reset_index(drop=True)
+            first = ~pdf[text_col].duplicated().to_numpy()
+            heads = pdf[first].reset_index(drop=True)
+            parsed = _parse_batch(heads[text_col], pre=pre, table=phrases)
+            if lane_flags is not None:
+                acc, key = lane_flags
+                acc.add({key: _lane_bits(parsed)})
             yield pd.concat(
-                [merged, parsed.drop(columns=["_pos"]).reset_index(drop=True)],
+                [heads.iloc[parsed["_pos"]].reset_index(drop=True),
+                 parsed.drop(columns=["_pos"])],
                 axis=1,
             )
+            if not first.all():
+                yield pdf[~first].assign(**dict.fromkeys(_PARSE_COLS))
 
     return queries.mapInPandas(run, schema=schema)
-
-
-# LINFAC normalization table (query.py:23-24)
-_LINFAC = [
-    i * (sum(si * si for si in range(i)) - (i - 1) * i * (i - 1) / 4)
-    for i in range(50)
-]
-
-
-def _fold_direction_penalty(q: DataFrame, word: DataFrame,
-                            enabled: bool | None = None) -> DataFrame:
-    """Stats-driven direction penalty (query.py:333-346 + F14).
-
-    Each query token's name_address_ratio (name vs address posting counts,
-    query.py:233-240) is regressed over token position; the slope's sign
-    says whether the name reads first (forward) or last (backward), and
-    the opposing split assignments absorb it as extra penalty
-    (token_assignment.py's dir_penalty uses).  All-JVM: posexplode + one
-    broadcast dictionary join + one aggregation.
-    """
-    if "name_count" not in word.columns:
-        return q
-    spark = q.sparkSession
-    # only queries with split assignments can absorb the penalty — for
-    # comma-phrased workloads (the flagship path) there are none and the
-    # whole fold short-circuits (``enabled`` carries the batched metadata
-    # probe from score_hits; standalone callers probe here)
-    if enabled is False:
-        return q
-    split_q = q.filter(F.col("adirection") != 0).select("query_id").distinct()
-    if enabled is None and split_q.isEmpty():
-        return q
-    toks = (
-        q.select("query_id", "full_norm").distinct()
-        .join(split_q, "query_id", "left_semi")
-        .select(
-            "query_id",
-            F.posexplode(
-                F.expr("filter(split(full_norm, ' '), w -> w <> '')")
-            ).alias("pos", "_tok"),
-        )
-    )
-    # the stats dictionary is bounded by the batch's distinct tokens
-    # BEFORE the broadcast — never the whole partial vocabulary (same
-    # batch-bounding + small-table shortcut as _batch_word_dict)
-    w = word.filter(F.col("type") == "w").select(
-        F.col("word_token").alias("_tok"),
-        F.when(
-            (F.col("name_count") + F.col("addr_count")) > 0,
-            F.col("name_count")
-            / (F.col("name_count") + F.col("addr_count")),
-        ).otherwise(F.lit(0.5)).alias("r"),
-    )
-    if _word_count(word) > DIRECT_DICT_MAX:
-        w = w.join(
-            F.broadcast(toks.select("_tok").distinct()), "_tok", "left_semi",
-        )
-    rt = toks.join(F.broadcast(w), "_tok", "left").withColumn(
-        "r", F.coalesce("r", F.lit(0.5))
-    )
-    stats = rt.groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("r").alias("_sr"),
-        F.sum(F.col("pos") * F.col("r")).alias("_sir"),
-        F.max(F.when(F.col("pos") == 0, F.col("r"))).alias("_r0"),
-        F.max(F.when(F.col("pos") == 1, F.col("r"))).alias("_r1"),
-    )
-    lf = spark.createDataFrame(
-        [(i, float(_LINFAC[i])) for i in range(3, 50)], "_n long, _lf double"
-    )
-    dirp = stats.join(F.broadcast(lf), "_n", "left").select(
-        "query_id",
-        F.when(F.col("_n") <= 1, F.lit(0.0))
-        .when(F.col("_n") >= 50, F.lit(0.0))
-        .when(F.col("_n") == 2, (F.col("_r1") - F.col("_r0")) / 3)
-        .otherwise(
-            (F.col("_n") * F.col("_sir")
-             - F.col("_sr") * F.col("_n") * (F.col("_n") - 1) / 2)
-            / F.col("_lf")
-        ).alias("_dirpen"),
-    )
-    return q.join(dirp, "query_id", "left").withColumn(
-        "apenalty",
-        F.col("apenalty")
-        + F.when(
-            (F.col("adirection") == 1) & (F.col("_dirpen") > 0),
-            F.col("_dirpen"),
-        ).when(
-            (F.col("adirection") == -1) & (F.col("_dirpen") < 0),
-            -F.col("_dirpen"),
-        ).otherwise(F.lit(0.0)),
-    ).drop("_dirpen")
 
 
 # When every partial of a name is at least this frequent, the lookup
@@ -666,14 +628,124 @@ W_LOOKUP_MIN_COUNT = 30_000
 DIRECT_DICT_MAX = 500_000
 
 
+# ---- per-call fixed cost.  Every Column node costs py4j round trips and
+# every DataFrame transformation an analysis pass on the JVM; rebuilding
+# the same search plan took ~5,000 round trips (~0.5 s) per call.  So the
+# parts that do not depend on the batch are built once: Column trees per
+# Spark session, input-schema flags and the tunable constants above (read
+# at call time, so patching them takes effect), and projections of the
+# long-lived index tables on the DataFrame object itself.
+def _per_session(build):
+    cache: dict = {}
+
+    @functools.wraps(build)
+    def get(spark, *flags):
+        key = (spark, W_LOOKUP_MIN_COUNT, DIRECT_DICT_MAX, *flags)
+        if key not in cache:
+            cache[key] = build(*flags)
+        return cache[key]
+    return get
+
+
+def _memo(df: DataFrame, key, build):
+    """``build(df)``, memoized on the DataFrame object under ``key``."""
+    memo = df.__dict__.setdefault("_nspark_memo", {})
+    if key not in memo:
+        memo[key] = build(df)
+    return memo[key]
+
+
 def _word_count(word: DataFrame) -> int:
-    """Row count of the word table, memoized on the DataFrame object —
-    one metadata-cheap job per table instance, reused across batches."""
-    n = getattr(word, "_nspark_word_count", None)
-    if n is None:
-        n = word.count()
-        word._nspark_word_count = n
-    return n
+    """Row count of the word table: one job per table instance."""
+    return _memo(word, "count", lambda w: w.count())
+
+
+# LINFAC normalization table (query.py:23-24)
+_LINFAC = [
+    i * (sum(si * si for si in range(i)) - (i - 1) * i * (i - 1) / 4)
+    for i in range(50)
+]
+
+
+@_per_session
+def _fold_exprs():
+    r = F.coalesce(F.col("r"), F.lit(0.5))
+    n = F.col("_n")
+    dirpen = (
+        F.when(n <= 1, F.lit(0.0))
+        .when(n >= 50, F.lit(0.0))
+        .when(n == 2, (F.col("_r1") - F.col("_r0")) / 3)
+        .otherwise(
+            (n * F.col("_sir") - F.col("_sr") * n * (n - 1) / 2)
+            / F.get(F.array(*map(F.lit, _LINFAC)), n.cast("int"))
+        )
+    )
+    return dict(
+        toks=F.posexplode(
+            F.expr("filter(split(full_norm, ' '), w -> w <> '')")
+        ).alias("pos", "_tok"),
+        ratio=F.when(
+            (F.col("name_count") + F.col("addr_count")) > 0,
+            F.col("name_count") / (F.col("name_count") + F.col("addr_count")),
+        ).otherwise(F.lit(0.5)).alias("r"),
+        stats=[
+            F.count(F.lit(1)).alias("_n"),
+            F.sum(r).alias("_sr"),
+            F.sum(F.col("pos") * r).alias("_sir"),
+            F.max(F.when(F.col("pos") == 0, r)).alias("_r0"),
+            F.max(F.when(F.col("pos") == 1, r)).alias("_r1"),
+        ],
+        dirpen=dirpen.alias("_dirpen"),
+        apenalty=F.col("apenalty") + F.when(
+            (F.col("adirection") == 1) & (F.col("_dirpen") > 0),
+            F.col("_dirpen"),
+        ).when(
+            (F.col("adirection") == -1) & (F.col("_dirpen") < 0),
+            -F.col("_dirpen"),
+        ).otherwise(F.lit(0.0)),
+    )
+
+
+def _fold_direction_penalty(q: DataFrame, word: DataFrame,
+                            enabled: bool | None = None) -> DataFrame:
+    """Stats-driven direction penalty (query.py:333-346 + F14).
+
+    Each query token's name_address_ratio (name vs address posting counts,
+    query.py:233-240) is regressed over token position; the slope's sign
+    says whether the name reads first (forward) or last (backward), and
+    the opposing split assignments absorb it as extra penalty
+    (token_assignment.py's dir_penalty uses).  All-JVM: posexplode + one
+    broadcast dictionary join + one aggregation.
+    """
+    # only queries with split assignments can absorb the penalty — for
+    # comma-phrased workloads (the flagship path) there are none and the
+    # whole fold short-circuits (``enabled`` carries the lane flag from
+    # the parse; standalone callers probe here)
+    if "name_count" not in word.columns or enabled is False:
+        return q
+    split_q = q.filter(F.col("adirection") != 0).select("query_id").distinct()
+    if enabled is None and split_q.isEmpty():
+        return q
+    ex = _fold_exprs(q.sparkSession)
+    toks = (
+        q.select("query_id", "full_norm").distinct()
+        .join(split_q, "query_id", "left_semi")
+        .select("query_id", ex["toks"])
+    )
+    # the stats dictionary is bounded by the batch's distinct tokens
+    # BEFORE the broadcast — never the whole partial vocabulary (same
+    # batch-bounding + small-table shortcut as _batch_word_dict)
+    w = _memo(word, "ratio", lambda wd: wd.filter(F.col("type") == "w")
+              .select(F.col("word_token").alias("_tok"), ex["ratio"]))
+    if _word_count(word) > DIRECT_DICT_MAX:
+        w = w.join(
+            F.broadcast(toks.select("_tok").distinct()), "_tok", "left_semi",
+        )
+    dirp = (toks.join(F.broadcast(w), "_tok", "left")
+            .groupBy("query_id").agg(*ex["stats"])
+            .select("query_id", ex["dirpen"]))
+    return (q.join(dirp, "query_id", "left")
+            .withColumn("apenalty", ex["apenalty"]).drop("_dirpen"))
 
 
 def _batch_word_dict(word: DataFrame, toks: DataFrame, *,
@@ -692,23 +764,170 @@ def _batch_word_dict(word: DataFrame, toks: DataFrame, *,
     broadcast into the explode join.  Dictionaries under DIRECT_DICT_MAX
     rows skip the prefilter — shipping them whole is cheaper than the
     extra pass."""
-    w_part = word.filter(F.col("type") == "w").select(
-        F.col("word_token").alias("_tok"), F.lit("w").alias("_ty"),
-        F.col("word_id").alias("_wid"),
-        (F.col("name_count") if has_stats else F.lit(1))
-        .cast("long").alias("_wcount"),
-    )
-    w_full = word.filter(F.col("type") == "W").select(
-        F.col("word_token").alias("_tok"), F.lit("W").alias("_ty"),
-        F.col("word_id").alias("_wid"),
-        F.lit(None).cast("long").alias("_wcount"),
-    )
-    wdict = w_part.unionByName(w_full)
+    def both_slices(word):
+        w_part = word.filter(F.col("type") == "w").select(
+            F.col("word_token").alias("_tok"), F.lit("w").alias("_ty"),
+            F.col("word_id").alias("_wid"),
+            (F.col("name_count") if has_stats else F.lit(1))
+            .cast("long").alias("_wcount"),
+        )
+        w_full = word.filter(F.col("type") == "W").select(
+            F.col("word_token").alias("_tok"), F.lit("W").alias("_ty"),
+            F.col("word_id").alias("_wid"),
+            F.lit(None).cast("long").alias("_wcount"),
+        )
+        return w_part.unionByName(w_full)
+
+    wdict = _memo(word, ("wdict", has_stats), both_slices)
     if _word_count(word) <= DIRECT_DICT_MAX:
         return wdict
     return wdict.join(
         F.broadcast(toks.select("_tok", "_ty").distinct()),
         ["_tok", "_ty"], "left_semi",
+    )
+
+
+_TOK = "struct<_tok:string,_ty:string,_role:string,_pos:int,_plen:int>"
+
+
+@_per_session
+def _plan_exprs(has_spans: bool, has_qual: bool, has_pc: bool,
+                has_hnr: bool):
+    """The static Column trees of _plan_assignments."""
+    def tok(t, ty, role, pos=F.lit(0), plen=F.lit(0)):
+        return F.struct(t.alias("_tok"), F.lit(ty).alias("_ty"),
+                        F.lit(role).alias("_role"), pos.alias("_pos"),
+                        plen.alias("_plen"))
+
+    parts = [
+        F.transform(F.expr("filter(split(name_norm, ' '), w -> w <> '')"),
+                    lambda w: tok(w, "w", "n")),
+        F.transform(F.expr("filter(split(addr_norm, ' '), w -> w <> '')"),
+                    lambda w: tok(w, "w", "a")),
+        F.when(F.col("name_norm") != "",
+               F.array(tok(F.col("name_norm"), "W", "f")))
+        .otherwise(F.expr("array()").cast(f"array<{_TOK}>")),
+    ]
+    if has_spans:
+        # one W probe per ladder SPAN (sub-span full-word readings of
+        # each address phrase — get_addr_ranking's path vocabulary);
+        # trivial ladders (addr_spans null) probe the whole phrases
+        parts.append(F.coalesce(
+            F.transform(F.col("addr_spans"),
+                        lambda s: tok(s["txt"], "W", "p", s["pos"], s["sid"])),
+            F.transform(F.col("addr_phrases"),
+                        lambda p, i: tok(p, "W", "p", i)),
+        ))
+    qual = (F.col("qual_key") if has_qual
+            else F.lit(None).cast("string")).alias("qual_key")
+    pcflag = ((F.col("postcode").isNotNull() & (F.col("name_norm") != ""))
+              if has_pc else F.lit(False)).alias("_pcf")
+    paths = (F.col("addr_paths") if has_spans else F.expr("array()").cast(
+        "array<struct<pos:int,pen:double,sids:array<int>>>"))
+    dflts = (F.col("addr_dflts") if has_spans
+             else F.expr("array()").cast("array<double>"))
+    hnr = (F.col("hnr") if has_hnr
+           else F.lit(None).cast("string")).alias("hnr")
+    first = F.col("_ti") == 0
+    name, addr = F.col("_role") == "n", F.col("_role") == "a"
+    hit = F.col("_wid").isNotNull()
+
+    def n_of(cond):
+        return F.sum(F.when(cond, 1).otherwise(0))
+
+    return dict(
+        explode=[
+            "query_id", "assign_id", "apenalty", qual, pcflag, hnr,
+            "name_norm", F.posexplode(F.concat(*parts)).alias("_ti", "_t"),
+            paths.alias("_ap"), dflts.alias("_ad"),
+        ],
+        # the ladder arrays ride ONLY the first exploded row of each
+        # assignment (posexplode index 0) — attaching them to every token
+        # row would duplicate them through the explode and shuffle N
+        # copies into the groupBy (measured ~20% of the flagship
+        # parse-plan wall).  hnr/name_norm ride it too, so the downstream
+        # lanes need no join back to the parse output — the housenumber
+        # and plain lanes become pure filters over the candidate set
+        tokens=[
+            "query_id", "assign_id", "apenalty", "qual_key", "_pcf",
+            F.when(first, F.col("_ap")).alias("addr_paths"),
+            F.when(first, F.col("_ad")).alias("addr_dflts"),
+            F.when(first, F.col("hnr")).alias("_hnr0"),
+            F.when(first, F.col("name_norm")).alias("_nn0"),
+            "_t.*",
+        ],
+        agg=[
+            F.first("apenalty").alias("apenalty"),
+            F.first("qual_key").alias("qual_key"),
+            F.first("_pcf").alias("pc_flagged"),
+            n_of(name).alias("_n_name"),
+            n_of(name & hit).alias("_n_name_hit"),
+            n_of(addr).alias("_n_addr"),
+            n_of(addr & hit).alias("_n_addr_hit"),
+            F.array_sort(F.collect_list(F.when(name, F.col("_wid"))))
+            .alias("name_ids"),
+            F.array_sort(F.collect_list(F.when(addr, F.col("_wid"))))
+            .alias("addr_ids"),
+            F.expr(
+                "min_by(CASE WHEN _role = 'n' THEN _wid END, "
+                "CASE WHEN _role = 'n' AND _wid IS NOT NULL "
+                "THEN struct(_wcount, _wid) END)"
+            ).alias("_drive_w"),
+            F.min(F.when(name, F.col("_wcount"))).alias("_drive_count"),
+            F.max(F.when(F.col("_role") == "f", F.col("_wid")))
+            .alias("_w_full_id"),
+            F.collect_list(F.when(
+                F.col("_role") == "p",
+                F.struct(F.col("_pos").alias("pos"),
+                         F.col("_plen").alias("sid"),
+                         F.col("_wid").alias("wid")),
+            )).alias("_span_hits"),
+            F.first("addr_paths", ignorenulls=True).alias("_paths"),
+            F.first("addr_dflts", ignorenulls=True).alias("_dflts"),
+            F.first("_hnr0", ignorenulls=True).alias("hnr"),
+            F.first("_nn0", ignorenulls=True).alias("name_norm"),
+        ],
+        matched=((F.col("_n_name") > 0)
+                 & (F.col("_n_name_hit") == F.col("_n_name"))
+                 & (F.col("_n_addr_hit") == F.col("_n_addr"))),
+        smap=F.expr(
+            "map_from_entries(transform(_span_hits, "
+            "h -> struct(h.pos * 100 + h.sid, h.wid)))"
+        ).alias("_smap"),
+        out=[
+            "query_id", "assign_id", "apenalty", "qual_key", "pc_flagged",
+            "hnr", "name_norm", "name_ids", "addr_ids",
+            F.when(
+                F.col("_w_full_id").isNotNull()
+                & (F.col("_drive_count") >= W_LOOKUP_MIN_COUNT),
+                F.col("_w_full_id"),
+            ).otherwise(F.col("_drive_w")).alias("drive_id"),
+            F.col("_w_full_id").alias("name_full_id"),
+            F.col("_n_name").alias("n_name"),
+            # the per-phrase ranking ladder: each path's span ids are
+            # resolved through the probe results; a path with any
+            # unindexed span can never match and is dropped (weigh_search
+            # only consults materialized token sets, ranking.sql:327-345)
+            F.expr(
+                "CASE WHEN _dflts IS NOT NULL AND size(_dflts) > 0 THEN "
+                "transform(sequence(0, size(_dflts) - 1), p -> struct("
+                "_dflts[p] AS dflt, "
+                "filter(transform(filter(_paths, pa -> pa.pos = p), "
+                "pa -> struct(pa.pen AS pen, "
+                "transform(pa.sids, s -> _smap[p * 100 + s]) AS ids)), "
+                "e -> forall(e.ids, i -> i IS NOT NULL)) AS entries)) "
+                # trivial ladder: one whole-phrase entry per span hit
+                "WHEN size(_span_hits) > 0 THEN "
+                "transform(array_sort(_span_hits), h -> struct("
+                "CAST(0.3 AS DOUBLE) AS dflt, "
+                "IF(h.wid IS NOT NULL, "
+                "array(struct(CAST(0.0 AS DOUBLE) AS pen, "
+                "array(h.wid) AS ids)), "
+                "CAST(array() AS array<struct<pen:double,ids:array<bigint>>>)"
+                ") AS entries)) "
+                "ELSE NULL END"
+            ).alias("addr_ranks"),
+        ],
     )
 
 
@@ -747,174 +966,23 @@ def _plan_assignments(q: DataFrame, word: DataFrame) -> DataFrame:
     against ONE broadcast dictionary — the bounded partial-word table
     plus the 'W' slice semi-joined down to the batch's distinct full
     strings — then ONE groupBy.  No join-backs; the earlier two-pass
-    form cost an extra shuffle + two joins per batch.
+    form cost an extra shuffle + two joins per batch.  Repeated
+    (query_id, assign_id) rows (one text parsed in two Arrow batches)
+    collapse first; that exchange also partitions the groupBy.
     """
-    has_stats = "name_count" in word.columns
-    has_spans = "addr_spans" in q.columns
-
-    parts = [
-        F.transform(
-            F.expr("filter(split(name_norm, ' '), w -> w <> '')"),
-            lambda w: F.struct(
-                w.alias("_tok"), F.lit("w").alias("_ty"),
-                F.lit("n").alias("_role"), F.lit(0).alias("_pos"),
-                F.lit(0).alias("_plen"),
-            ),
-        ),
-        F.transform(
-            F.expr("filter(split(addr_norm, ' '), w -> w <> '')"),
-            lambda w: F.struct(
-                w.alias("_tok"), F.lit("w").alias("_ty"),
-                F.lit("a").alias("_role"), F.lit(0).alias("_pos"),
-                F.lit(0).alias("_plen"),
-            ),
-        ),
-        F.when(
-            F.col("name_norm") != "",
-            F.array(F.struct(
-                F.col("name_norm").alias("_tok"), F.lit("W").alias("_ty"),
-                F.lit("f").alias("_role"), F.lit(0).alias("_pos"),
-                F.lit(0).alias("_plen"),
-            )),
-        ).otherwise(F.expr(
-            "array()"
-        ).cast("array<struct<_tok:string,_ty:string,_role:string,"
-               "_pos:int,_plen:int>>")),
-    ]
-    if has_spans:
-        # one W probe per ladder SPAN (sub-span full-word readings of
-        # each address phrase — get_addr_ranking's path vocabulary);
-        # trivial ladders (addr_spans null) probe the whole phrases
-        parts.append(F.coalesce(
-            F.transform(
-                F.col("addr_spans"),
-                lambda s: F.struct(
-                    s["txt"].alias("_tok"), F.lit("W").alias("_ty"),
-                    F.lit("p").alias("_role"), s["pos"].alias("_pos"),
-                    s["sid"].alias("_plen"),
-                ),
-            ),
-            F.transform(
-                F.col("addr_phrases"),
-                lambda p, i: F.struct(
-                    p.alias("_tok"), F.lit("W").alias("_ty"),
-                    F.lit("p").alias("_role"), i.alias("_pos"),
-                    F.lit(0).alias("_plen"),
-                ),
-            ),
-        ))
-    qual = (F.col("qual_key") if "qual_key" in q.columns
-            else F.lit(None).cast("string")).alias("qual_key")
-    pcflag = ((F.col("postcode").isNotNull() & (F.col("name_norm") != ""))
-              if "postcode" in q.columns else F.lit(False)).alias("_pcf")
-    paths = (F.col("addr_paths") if has_spans else F.expr("array()").cast(
-        "array<struct<pos:int,pen:double,sids:array<int>>>"))
-    dflts = (F.col("addr_dflts") if has_spans
-             else F.expr("array()").cast("array<double>"))
-    # the ladder arrays ride ONLY the first exploded row of each
-    # assignment (posexplode index 0) — attaching them to every token row
-    # would duplicate them through the explode and shuffle N copies into
-    # the groupBy (measured ~20% of the flagship parse-plan wall)
-    hnr_col = (F.col("hnr") if "hnr" in q.columns
-               else F.lit(None).cast("string")).alias("hnr")
-    toks = q.select(
-        "query_id", "assign_id", "apenalty", qual, pcflag,
-        hnr_col, "name_norm",
-        F.posexplode(F.concat(*parts)).alias("_ti", "_t"),
-        paths.alias("_ap"), dflts.alias("_ad"),
-    ).select(
-        "query_id", "assign_id", "apenalty", "qual_key", "_pcf",
-        F.when(F.col("_ti") == 0, F.col("_ap")).alias("addr_paths"),
-        F.when(F.col("_ti") == 0, F.col("_ad")).alias("addr_dflts"),
-        # hnr/name_norm ride the first exploded row only (same discipline
-        # as the ladder arrays) so the downstream lanes need no join back
-        # to the parse output — the housenumber and plain lanes become
-        # pure filters over the candidate set
-        F.when(F.col("_ti") == 0, F.col("hnr")).alias("_hnr0"),
-        F.when(F.col("_ti") == 0, F.col("name_norm")).alias("_nn0"),
-        "_t.*",
-    )
-
-    wdict = _batch_word_dict(word, toks, has_stats=has_stats)
-
-    toks = toks.join(F.broadcast(wdict), ["_tok", "_ty"], "left")
-    agg = toks.groupBy("query_id", "assign_id").agg(
-        F.first("apenalty").alias("apenalty"),
-        F.first("qual_key").alias("qual_key"),
-        F.first("_pcf").alias("pc_flagged"),
-        F.sum(F.when(F.col("_role") == "n", 1).otherwise(0)).alias("_n_name"),
-        F.sum(F.when((F.col("_role") == "n") & F.col("_wid").isNotNull(), 1)
-              .otherwise(0)).alias("_n_name_hit"),
-        F.sum(F.when(F.col("_role") == "a", 1).otherwise(0)).alias("_n_addr"),
-        F.sum(F.when((F.col("_role") == "a") & F.col("_wid").isNotNull(), 1)
-              .otherwise(0)).alias("_n_addr_hit"),
-        F.array_sort(F.collect_list(
-            F.when(F.col("_role") == "n", F.col("_wid"))
-        )).alias("name_ids"),
-        F.array_sort(F.collect_list(
-            F.when(F.col("_role") == "a", F.col("_wid"))
-        )).alias("addr_ids"),
-        F.expr(
-            "min_by(CASE WHEN _role = 'n' THEN _wid END, "
-            "CASE WHEN _role = 'n' AND _wid IS NOT NULL "
-            "THEN struct(_wcount, _wid) END)"
-        ).alias("_drive_w"),
-        F.min(F.when(F.col("_role") == "n", F.col("_wcount")))
-        .alias("_drive_count"),
-        F.max(F.when(F.col("_role") == "f", F.col("_wid")))
-        .alias("_w_full_id"),
-        F.collect_list(F.when(
-            F.col("_role") == "p",
-            F.struct(F.col("_pos").alias("pos"),
-                     F.col("_plen").alias("sid"),
-                     F.col("_wid").alias("wid")),
-        )).alias("_span_hits"),
-        F.first("addr_paths", ignorenulls=True).alias("_paths"),
-        F.first("addr_dflts", ignorenulls=True).alias("_dflts"),
-        F.first("_hnr0", ignorenulls=True).alias("hnr"),
-        F.first("_nn0", ignorenulls=True).alias("name_norm"),
-    ).filter(
-        (F.col("_n_name") > 0)
-        & (F.col("_n_name_hit") == F.col("_n_name"))
-        & (F.col("_n_addr_hit") == F.col("_n_addr"))
-    )
-    # assemble the per-phrase ranking ladder: each path's span ids are
-    # resolved through the probe results; a path with any unindexed span
-    # can never match and is dropped (weigh_search only consults
-    # materialized token sets, ranking.sql:327-345)
-    agg = agg.withColumn("_smap", F.expr(
-        "map_from_entries(transform(_span_hits, "
-        "h -> struct(h.pos * 100 + h.sid, h.wid)))"
-    )).withColumn("addr_ranks", F.expr(
-        "CASE WHEN _dflts IS NOT NULL AND size(_dflts) > 0 THEN "
-        "transform(sequence(0, size(_dflts) - 1), p -> struct("
-        "_dflts[p] AS dflt, "
-        "filter(transform(filter(_paths, pa -> pa.pos = p), "
-        "pa -> struct(pa.pen AS pen, "
-        "transform(pa.sids, s -> _smap[p * 100 + s]) AS ids)), "
-        "e -> forall(e.ids, i -> i IS NOT NULL)) AS entries)) "
-        # trivial ladder: one whole-phrase entry per span hit
-        "WHEN size(_span_hits) > 0 THEN "
-        "transform(array_sort(_span_hits), h -> struct("
-        "CAST(0.3 AS DOUBLE) AS dflt, "
-        "IF(h.wid IS NOT NULL, "
-        "array(struct(CAST(0.0 AS DOUBLE) AS pen, array(h.wid) AS ids)), "
-        "CAST(array() AS array<struct<pen:double,ids:array<bigint>>>)"
-        ") AS entries)) "
-        "ELSE NULL END"
-    ))
-    return agg.select(
-        "query_id", "assign_id", "apenalty", "qual_key", "pc_flagged",
-        "hnr", "name_norm",
-        "name_ids", "addr_ids",
-        F.when(
-            F.col("_w_full_id").isNotNull()
-            & (F.col("_drive_count") >= W_LOOKUP_MIN_COUNT),
-            F.col("_w_full_id"),
-        ).otherwise(F.col("_drive_w")).alias("drive_id"),
-        F.col("_w_full_id").alias("name_full_id"),
-        F.col("_n_name").alias("n_name"),
-        "addr_ranks",
+    cols = q.columns
+    ex = _plan_exprs(q.sparkSession, "addr_spans" in cols,
+                     "qual_key" in cols, "postcode" in cols, "hnr" in cols)
+    toks = (q.dropDuplicates(["query_id", "assign_id"])
+            .select(*ex["explode"]).select(*ex["tokens"]))
+    wdict = _batch_word_dict(word, toks,
+                             has_stats="name_count" in word.columns)
+    return (
+        toks.join(F.broadcast(wdict), ["_tok", "_ty"], "left")
+        .groupBy("query_id", "assign_id").agg(*ex["agg"])
+        .filter(ex["matched"])
+        .select("*", ex["smap"])
+        .select(*ex["out"])
     )
 
 
@@ -943,6 +1011,225 @@ def feature_type_to_rank(feature_type: str | None) -> tuple[int, int]:
     return FEATURE_TYPE_TO_RANK.get(feature_type, (0, 30))
 
 
+# the columns of every hit row after the query key (score_hits's union)
+_HIT_COLS = ("place_id", "osm_type", "osm_id", "class", "type",
+             "rank_search", "rank_address", "importance", "lon", "lat",
+             "housenumber", "penalty", "text_dist")
+
+
+@_per_session
+def _search_exprs(text_col: str):
+    """The static Column trees of score_hits and geocode."""
+    named = F.col("name_norm") != ""
+    pc_readings = F.explode(F.transform("pc_all", lambda p: F.upper(p)))
+
+    def hit(place_id, osm_type, osm_id, cls, typ, rank_search, rank_address,
+            importance, lon, lat, housenumber, penalty, text_dist):
+        return ["query_id", "assign_id", *(
+            (F.col(c) if isinstance(c, str) else c).alias(n) for c, n in zip(
+                (place_id, osm_type, osm_id, cls, typ, rank_search,
+                 rank_address, importance, lon, lat, housenumber, penalty,
+                 text_dist), _HIT_COLS))]
+
+    none = F.lit(None).cast("string")
+    cand_cols = ("place_id", "osm_type", "osm_id", "class", "type",
+                 "rank_search", "rank_address", "importance", "lon", "lat")
+    text_dist = F.round(
+        F.levenshtein("name_norm", "norm_name")
+        / F.greatest(F.length("name_norm"), F.length("norm_name"), F.lit(1)),
+        6,
+    )
+    min_dist = F.expr(
+        "array_min(transform(_cents, c -> "
+        "sqrt((c.lon - lon) * (c.lon - lon) + "
+        "(c.lat - lat) * (c.lat - lat))))"
+    )
+    cat_cols = ("c_pid", "c_ot", "c_oid", "c_cls", "c_typ", "c_rs", "c_ra",
+                "c_imp", "c_lon", "c_lat")
+    return dict(
+        src=["query_id", F.col(text_col).alias("_qtext")],
+        has_text=F.col("_qtext").isNotNull(),
+        # the same rows as coalesce(assign_id, 0) = 0, written so that
+        # Spark's runtime bloom-filter rule does not read it as selective:
+        # it would build a filter from the ids into every lane of the
+        # final join (an extra job and MBs of task binary per call)
+        id_row=F.col("assign_id").isNull() | (F.col("assign_id") == 0),
+        assign_row=F.col("assign_id").isNotNull(),
+        q=[F.col("_qtext").alias("query_id"), *_PARSE_COLS],
+        lookup_all=F.expr(
+            "forall(name_ids, i -> array_contains(name_vector, i)) AND "
+            "(size(addr_ids) = 0 OR "
+            "forall(addr_ids, i -> array_contains(nameaddress_vector, i)))"),
+        # qualifier restrict (place_search.py qualifier filter): a
+        # category-word reading keeps only candidates of that class/type
+        qual=(F.col("qual_key").isNull()
+              | (F.concat_ws("|", "class", "type") == F.col("qual_key"))),
+        cand=[
+            "place_id", "query_id", "assign_id", "pc_flagged", "hnr",
+            "name_norm", *cand_cols[1:], "norm_name", "own_pc",
+            # weigh_search (ranking.sql:327-345): fold the per-assignment
+            # FieldRanking penalties — 0 when the candidate's vector holds
+            # the query's full-word token, the ranking default otherwise.
+            # Folded into apenalty so every downstream lane
+            # (house/interp/fallback) inherits it, like the reference's
+            # AddressSearch does.
+            (F.col("apenalty")
+             + F.when(
+                 F.col("name_full_id").isNotNull()
+                 & F.expr("array_contains(name_vector, name_full_id)"),
+                 F.lit(0.0),
+             ).otherwise(F.lit(0.2) + F.lit(0.1) * (F.col("n_name") - 1))
+             + F.when(F.col("addr_ranks").isNull(), F.lit(0.0)).otherwise(
+                 # per phrase: cheapest ladder path whose full-word spans
+                 # are all in the candidate's vector, else the default —
+                 # one allocation-free pass per phrase (this fold runs per
+                 # CANDIDATE row; intermediate arrays here measured ~3 s
+                 # on the 100k-page flagship)
+                 F.expr(
+                     "aggregate(addr_ranks, 0.0D, (acc, ph) -> acc + "
+                     "aggregate(ph.entries, ph.dflt, (best, e) -> "
+                     "IF(e.pen < best AND forall(e.ids, i -> "
+                     "array_contains(nameaddress_vector, i)), "
+                     "e.pen, best)))"
+                 )
+             )).alias("apenalty"),
+        ],
+        # no postcode table: a name assignment that consumed a token as
+        # a postcode cannot verify it — charge the unknown-postcode
+        # penalty (2.0, same as the with-table miss) so readings that
+        # actually match the token (housenumber, address word) outrank
+        # it.  The flag rode through the plan agg — no join here.
+        pc_unverified=F.col("apenalty") + F.when(
+            F.col("pc_flagged"), F.lit(2.0)).otherwise(F.lit(0.0)),
+        pc_named=F.col("postcode").isNotNull() & named,
+        qpc=["query_id", "assign_id", pc_readings.alias("_qpc"),
+             (F.col("addr_norm") != "").alias("_has_addr")],
+        qpc_cents=F.collect_list(F.struct("lon", "lat")).alias("_cents"),
+        qpc_agg=[F.collect_set("_qpc").alias("_qpcs"),
+                 F.flatten(F.collect_list("_cents")).alias("_cents"),
+                 F.first("_has_addr").alias("_has_addr")],
+        pc_penalty=F.col("apenalty")
+        + F.when(F.col("_qpcs").isNull(), F.lit(0.0))
+        .when(F.array_contains("_qpcs", F.upper("own_pc")), F.lit(0.0))
+        .when(~F.col("_has_addr"), F.lit(1.0))
+        .otherwise(F.coalesce(min_dist, F.lit(2.0))),
+        street=(F.col("hnr").isNotNull()
+                & F.col("rank_search").between(26, 27)),
+        house_on=((F.col("place_id") == F.col("street_id"))
+                  & (F.col("hnr") == F.col("h_hnr"))),
+        house=hit("house_id", "h_osm_type", "h_osm_id", F.lit("building"),
+                  F.lit("yes"), F.lit(30), F.lit(30), F.lit(0.0), "h_lon",
+                  "h_lat", "hnr", "apenalty", F.lit(0.0)),
+        line_on=F.col("place_id") == F.col("street_id"),
+        in_range=(
+            (F.col("hnr").cast("int") >= F.col("startnumber"))
+            & (F.col("hnr").cast("int") <= F.col("endnumber"))
+            & ((F.col("hnr").cast("int") - F.col("startnumber"))
+               % F.col("step") == 0)),
+        interp=hit("osmline_id", F.lit("W"), "osmline_id", F.lit("place"),
+                   F.lit("houses"), F.lit(30), F.lit(30),
+                   F.lit(-0.1),  # below exact house matches
+                   "mid_lon", "mid_lat", "hnr",
+                   F.lit(1.0) + F.col("apenalty"), F.lit(0.0)),
+        plain_rows=F.col("hnr").isNull(),
+        plain=hit(*cand_cols, none, "apenalty", F.when(
+            F.col("name_norm").isNull() | F.col("norm_name").isNull(),
+            F.lit(1.0)).otherwise(text_dist)),
+        fallback=hit(*cand_cols, none, F.lit(2.0) + F.col("apenalty"),
+                     F.lit(0.0)),
+        # one PostcodeSearch per country reading (the reference emits one
+        # per outcode in the parsed set, postcode_parser.py:85-110) —
+        # '45325' resolves against both the identity and '453 25' rows
+        pc_only=F.col("postcode").isNotNull() & ~named,
+        qp=["query_id", "assign_id", "apenalty",
+            pc_readings.alias("postcode")],
+        pc_hit=hit(
+            # postcodes live outside the placex id space: namespace bit 3
+            # like osmline, but negative to stay disjoint from it as well
+            -F.abs(F.xxhash64("pc_cc", "postcode")), F.lit("P"),
+            F.lit(None).cast("long"), F.lit("place"), F.lit("postcode"),
+            F.col("pc_rs").cast("int"), F.col("pc_ra").cast("int"),
+            F.lit(0.0), "pc_lon", "pc_lat", none, "apenalty", F.lit(0.0)),
+        near_rows=F.col("near_key").isNotNull() & named,
+        poi_rows=F.col("near_key").isNotNull() & ~named,
+        anchor=F.expr(
+            "min_by(struct(lon, lat, penalty), "
+            "struct(penalty, text_dist, -importance, place_id))"
+        ).alias("_a"),
+        anchor_cols=[
+            "query_id", "assign_id", "near_key",
+            F.concat_ws("#", F.col("query_id").cast("string"),
+                        F.col("assign_id").cast("string")).alias("_akey"),
+            F.col("_a.lon").alias("lon"), F.col("_a.lat").alias("lat"),
+            F.col("_a.penalty").alias("a_pen"),
+        ],
+        near=hit("cand_id", *cat_cols[1:], none, "a_pen", F.lit(0.0)),
+        poi=hit(*cat_cols, none, "apenalty", F.lit(0.0)),
+        out=[F.col("query_id").alias("_qtext"), *_HIT_COLS],
+        best=F.expr(
+            "min_by(struct(" + ", ".join(_HIT_COLS) + "), "
+            "struct(penalty, text_dist, -importance, place_id))"
+        ).alias("_best"),
+    )
+
+
+def _candidate_side(search_name: DataFrame, countries) -> DataFrame:
+    """The search_name columns the candidate stage reads."""
+    if countries:
+        if "country_code" not in search_name.columns:
+            raise ValueError(
+                "countries= filter requires a country_code column on "
+                "search_name")
+        search_name = search_name.filter(F.lower(F.col("country_code"))
+                                         .isin([c.lower() for c in countries]))
+    return search_name.select(
+        "place_id", "osm_type", "osm_id", "class", "type", "rank_search",
+        "rank_address", "importance", "lon", "lat", "norm_name",
+        "name_vector", "nameaddress_vector",
+        (F.col("postcode") if "postcode" in search_name.columns
+         else F.lit(None).cast("string")).alias("own_pc"),
+    )
+
+
+def _houses(search_name: DataFrame) -> DataFrame:
+    """One row per (house, housenumber): clean_housenumbers splits
+    "2;4;6" lists, so a house matches any of its numbers."""
+    if "housenumbers" in search_name.columns:
+        rows = search_name.filter(F.size("housenumbers") > 0)
+        hnr = F.explode("housenumbers")
+    else:
+        rows = search_name.filter(F.col("housenumber").isNotNull())
+        hnr = F.col("housenumber")
+    return rows.select(
+        F.col("parent_place_id").alias("street_id"),
+        F.col("place_id").alias("house_id"),
+        hnr.alias("h_hnr"),
+        F.col("lon").alias("h_lon"),
+        F.col("lat").alias("h_lat"),
+        F.col("osm_type").alias("h_osm_type"),
+        F.col("osm_id").alias("h_osm_id"),
+    )
+
+
+def _categories(placex: DataFrame, countries) -> DataFrame:
+    """Near/POI category candidates (unlinked places)."""
+    if "linked_place_id" in placex.columns:
+        placex = placex.filter(F.col("linked_place_id").isNull())
+    if countries:
+        placex = placex.filter(F.lower(F.col("country_code")).isin(
+            [c.lower() for c in countries]))
+    return placex.select(
+        F.col("place_id").alias("c_pid"),
+        F.col("osm_type").alias("c_ot"), F.col("osm_id").alias("c_oid"),
+        F.col("class").alias("c_cls"), F.col("type").alias("c_typ"),
+        F.col("rank_search").alias("c_rs"),
+        F.col("rank_address").alias("c_ra"),
+        F.coalesce(F.col("importance"), F.lit(0.0)).alias("c_imp"),
+        F.col("lon").alias("c_lon"), F.col("lat").alias("c_lat"),
+        F.concat_ws("|", "class", "type").alias("c_key"),
+    )
+
+
 def score_hits(
     spark,
     idx: IndexTables,
@@ -960,11 +1247,21 @@ def score_hits(
     near_radius_deg: float = 0.02,
     preprocessors: list | None = None,
     phrases=None,
-) -> DataFrame:
-    """All scored candidate hits per query (the ranked union the final
-    top-1/top-k cuts operate on).
+) -> tuple[DataFrame, DataFrame]:
+    """All scored candidate hits per query text (the ranked union the
+    final top-1/top-k cuts operate on), and the rows to attach them to.
 
-    Every lane operates per (query_id, assign_id) — one row per role
+    Returns ``(ids, hits)``: ``ids`` holds one ``(query_id, _qtext)`` row
+    per input row whose text is not NULL; ``hits`` holds the hits, keyed
+    by ``_qtext``.  The lanes run once per DISTINCT text, and the callers
+    join the per-text decision back to the ids (guide §8: decide on the
+    small proxy, attach the decision once).  Geocoding is a pure function
+    of the text — every search knob is batch-global — so the answers are
+    those of a per-row search, while a crawl batch, which mentions the
+    same address on many pages, pays the machinery once per distinct
+    string instead of once per page.
+
+    Every lane operates per (text, assign_id) — one row per role
     assignment from parse_queries — and the final min_by folds the
     assignment penalty into the ranking, so the cheapest assignment whose
     lanes all match wins (the reference's penalty-ordered plan execution,
@@ -980,35 +1277,32 @@ def score_hits(
     given country codes (the reference's countrycodes param,
     SearchDetails.countries, types.py + place_search country filter) —
     applied at the candidate join, so excluded countries never reach the
-    lane exchanges."""
-    # materialize the parsed assignments BEFORE the direction fold — the
-    # fold reads the parse output three times (split filter, token
-    # explode, main flow) and the Python parse must run exactly once.
-    # localCheckpoint instead of persist: every downstream lane's logical
-    # plan then starts from a leaf RDD rather than embedding the whole
-    # mapInPandas subtree, which cuts the per-action Catalyst/cache-lookup
-    # time on the driver (guide §3.3: materialise to truncate the plan)
-    parsed = parse_queries(queries, text_col, preprocessors=preprocessors,
-                           phrases=phrases).localCheckpoint(eager=True)
-    # ONE metadata probe over the cached parse feeds every conditional
-    # lane below — replaces four serial isEmpty() driver round trips
-    # (direction fold, postcode penalty, near chain, poi search)
-    _fl = parsed.agg(
-        F.max((F.col("adirection") != 0).cast("int")).alias("split"),
-        F.max((F.col("postcode").isNotNull()
-               & (F.col("name_norm") != "")).cast("int")).alias("pc_name"),
-        F.max((F.col("near_key").isNotNull()
-               & (F.col("name_norm") != "")).cast("int")).alias("near"),
-        F.max((F.col("near_key").isNotNull()
-               & (F.col("name_norm") == "")).cast("int")).alias("poi"),
-        F.max(F.col("qual_key").isNotNull().cast("int")).alias("qual"),
-    ).head()
-    has_split, has_pc_name, has_near, has_poi, has_qual = (
-        bool(_fl["split"]), bool(_fl["pc_name"]),
-        bool(_fl["near"]), bool(_fl["poi"]), bool(_fl["qual"]))
-    q = _fold_direction_penalty(parsed, idx.word, enabled=has_split)
-    if q is not parsed:  # fold disabled -> q IS the checkpointed parse
-        q = q.localCheckpoint(eager=True)
+    lane exchanges.
+
+    Three stages run eagerly, each as one ``localCheckpoint``: the parse,
+    the plan and the candidate set."""
+    ex = _search_exprs(spark, text_col)
+    # the parse reads the caller's rows and runs the Python parse in ONE
+    # job (a Python-backed input costs one Python stage, not two) and
+    # reports the lane flags through the accumulator.  localCheckpoint:
+    # every downstream lane's logical plan then starts from a leaf RDD
+    # rather than embedding the whole mapInPandas subtree, which cuts the
+    # per-action Catalyst/cache-lookup time on the driver (guide §3.3:
+    # materialise to truncate the plan)
+    flags, key = _lane_flag_acc(spark.sparkContext), next(_CALL_KEYS)
+    try:
+        parsed = parse_queries(
+            queries.select(*ex["src"]).filter(ex["has_text"]), "_qtext",
+            preprocessors=preprocessors, phrases=phrases,
+            lane_flags=(flags, key),
+        ).localCheckpoint(eager=True)
+    finally:
+        lanes = flags.value.pop(key, 0)
+    ids = parsed.filter(ex["id_row"]).select("query_id", "_qtext")
+    # the per-text assignments, keyed by the text; a text parsed in
+    # several Arrow batches repeats here (the plan collapses it, and every
+    # other reader below tolerates it)
+    q = parsed.filter(ex["assign_row"]).select(*ex["q"])
 
     # ---- planned lookup (J1 LookupAll + J3 Restrict, stats-driven):
     # ONE posting join, driven by each assignment's rarest name token
@@ -1018,94 +1312,31 @@ def score_hits(
     # own name_vector/nameaddress_vector — address tokens are
     # anti-selective (a city name posts on every place in the city), so
     # keeping them out of the join is load-bearing at scale (measured 6x).
-    plan = _plan_assignments(q, idx.word).localCheckpoint(eager=True)
+    # The direction fold only changes split readings' penalties, which
+    # only the plan reads.
+    plan = _plan_assignments(
+        _fold_direction_penalty(q, idx.word, enabled=bool(lanes & _SPLIT)),
+        idx.word,
+    ).localCheckpoint(eager=True)
     # pre-filter the posting table by the batch's distinct DRIVE ids (a
     # bounded broadcast) so the posting shuffle moves only the rarest-token
     # rows — strictly fewer than round 2's all-query-token prefilter
-    drive_posts = idx.name_postings.join(
-        F.broadcast(plan.select(F.col("drive_id").alias("word_id"))
-                    .distinct()),
-        "word_id", "left_semi",
-    ).select(F.col("word_id").alias("drive_id"), "place_id")
-
-    has_cc = "country_code" in idx.search_name.columns
-    sn = idx.search_name.select(
-        "place_id", "osm_type", "osm_id", "class", "type", "rank_search",
-        "rank_address", "importance", "lon", "lat", "housenumber",
-        "norm_name", "parent_place_id", "name_vector",
-        "nameaddress_vector",
-        *(["country_code"] if has_cc else []),
-        (F.col("postcode") if "postcode" in idx.search_name.columns
-         else F.lit(None).cast("string")).alias("own_pc"),
-    )
-    if countries:
-        if not has_cc:
-            raise ValueError(
-                "countries= filter requires a country_code column on "
-                "search_name")
-        sn = sn.filter(F.lower(F.col("country_code")).isin(
-            [c.lower() for c in countries]))
-    if has_cc:
-        sn = sn.drop("country_code")
+    drive_posts = _memo(
+        idx.name_postings, "drive",
+        lambda p: p.select(F.col("word_id").alias("drive_id"), "place_id"),
+    ).join(F.broadcast(plan.select("drive_id").distinct()), "drive_id",
+           "left_semi")
+    sn = _memo(idx.search_name, ("cand", tuple(countries or ())),
+               lambda s: _candidate_side(s, countries))
     # materialize the candidate set once: the house / interpolation /
     # fallback branches below all reuse it, and Spark does not reuse
     # exchanges across differently-projected union branches — without this
     # the whole posting-join subtree runs 3-4x (measured 63s -> ~20s)
-    cand = (
-        plan.join(drive_posts, "drive_id")
-        .join(sn, "place_id")
-        .filter(F.expr(
-            "forall(name_ids, i -> array_contains(name_vector, i))"
-        ))
-        .filter(
-            (F.size("addr_ids") == 0)
-            | F.expr(
-                "forall(addr_ids, i -> array_contains(nameaddress_vector, i))"
-            )
-        )
-    )
-    if has_qual:
-        # qualifier restrict (place_search.py qualifier filter): a
-        # category-word reading keeps only candidates of that class/type
-        # — skipped entirely when no assignment carries one (probe above)
-        cand = cand.filter(
-            F.col("qual_key").isNull()
-            | (F.concat_ws("|", "class", "type") == F.col("qual_key"))
-        )
-    cand = (
-        cand
-        # weigh_search (ranking.sql:327-345): fold the per-assignment
-        # FieldRanking penalties — 0 when the candidate's vector holds the
-        # query's full-word token, the ranking default otherwise.  Folded
-        # into apenalty so every downstream lane (house/interp/fallback)
-        # inherits it, like the reference's AddressSearch does.
-        .withColumn(
-            "apenalty",
-            F.col("apenalty")
-            + F.when(
-                F.col("name_full_id").isNotNull()
-                & F.expr("array_contains(name_vector, name_full_id)"),
-                F.lit(0.0),
-            ).otherwise(F.lit(0.2) + F.lit(0.1) * (F.col("n_name") - 1))
-            + F.when(F.col("addr_ranks").isNull(), F.lit(0.0)).otherwise(
-                # per phrase: cheapest ladder path whose full-word spans
-                # are all in the candidate's vector, else the default —
-                # one allocation-free pass per phrase (this fold runs per
-                # CANDIDATE row; intermediate arrays here measured ~3 s
-                # on the 100k-page flagship)
-                F.expr(
-                    "aggregate(addr_ranks, 0.0D, (acc, ph) -> acc + "
-                    "aggregate(ph.entries, ph.dflt, (best, e) -> "
-                    "IF(e.pen < best AND forall(e.ids, i -> "
-                    "array_contains(nameaddress_vector, i)), "
-                    "e.pen, best)))"
-                )
-            ),
-        )
-        .drop("drive_id", "qual_key", "name_ids", "addr_ids",
-              "name_full_id", "n_name", "addr_ranks", "name_vector",
-              "nameaddress_vector")
-    )
+    cand = plan.join(drive_posts, "drive_id").join(sn, "place_id") \
+        .filter(ex["lookup_all"])
+    if lanes & _QUAL:
+        cand = cand.filter(ex["qual"])
+    cand = cand.select(*ex["cand"])
     # ---- candidate-side search knobs (filters push below the persist so
     # excluded/out-of-layer rows never enter the cached exchange)
     if excluded_place_ids:
@@ -1136,39 +1367,20 @@ def score_hits(
     # the query postcode's centroid (2.0 when unknown); with no address
     # terms a flat 1.0 so PostcodeSearch outranks it.  The postcode table
     # is semi-joined down to the batch's postcodes before the broadcast.
-    if has_pc_name:
+    if lanes & _PC_NAME and postcodes is None:
+        cand = cand.withColumn("apenalty", ex["pc_unverified"])
+    elif lanes & _PC_NAME:
         # every country reading of the assignment's postcode token
         # (pc_all, canonical first — postcode_parser.py keeps the full
         # outcode set), exploded for the table join then re-aggregated to
         # ONE row per assignment so the candidate set never multiplies
-        pc_all_col = (F.col("pc_all") if "pc_all" in q.columns
-                      else F.array("postcode"))
-        qpc = q.filter(
-            F.col("postcode").isNotNull() & (F.col("name_norm") != "")
-        ).select(
-            "query_id", "assign_id",
-            F.explode(pc_all_col).alias("_qpc"),
-            (F.col("addr_norm") != "").alias("_has_addr"),
-        ).withColumn("_qpc", F.upper("_qpc"))
-    if postcodes is None and has_pc_name:
-        # no postcode table: a name assignment that consumed a token as
-        # a postcode cannot verify it — charge the unknown-postcode
-        # penalty (2.0, same as the with-table miss) so readings that
-        # actually match the token (housenumber, address word) outrank
-        # it.  The flag rode through the plan agg — no join here.
-        cand = cand.withColumn(
-            "apenalty",
-            F.col("apenalty")
-            + F.when(F.col("pc_flagged"), F.lit(2.0)).otherwise(F.lit(0.0)),
-        )
-    if postcodes is not None and has_pc_name:
+        qpc = q.filter(ex["pc_named"]).select(*ex["qpc"])
         pc_cents = (
-            postcodes
-            .withColumn("_qpc", F.upper("postcode"))
+            _memo(postcodes, "upper",
+                  lambda p: p.withColumn("_qpc", F.upper("postcode")))
             .join(F.broadcast(qpc.select("_qpc").distinct()),
                   "_qpc", "left_semi")
-            .groupBy("_qpc")
-            .agg(F.collect_list(F.struct("lon", "lat")).alias("_cents"))
+            .groupBy("_qpc").agg(ex["qpc_cents"])
         )
         # fold the readings back to one row per assignment: the set of
         # reading spellings (own-postcode equality check) and the union
@@ -1177,29 +1389,11 @@ def score_hits(
         # best-of-outcode-set ranking)
         qpc_agg = (
             qpc.join(F.broadcast(pc_cents), "_qpc", "left")
-            .groupBy("query_id", "assign_id")
-            .agg(
-                F.collect_set("_qpc").alias("_qpcs"),
-                F.flatten(F.collect_list("_cents")).alias("_cents"),
-                F.first("_has_addr").alias("_has_addr"),
-            )
-        )
-        min_dist = F.expr(
-            "array_min(transform(_cents, c -> "
-            "sqrt((c.lon - lon) * (c.lon - lon) + "
-            "(c.lat - lat) * (c.lat - lat))))"
+            .groupBy("query_id", "assign_id").agg(*ex["qpc_agg"])
         )
         cand = (
             cand.join(qpc_agg, ["query_id", "assign_id"], "left")
-            .withColumn(
-                "apenalty",
-                F.col("apenalty")
-                + F.when(F.col("_qpcs").isNull(), F.lit(0.0))
-                .when(F.array_contains("_qpcs", F.upper("own_pc")),
-                      F.lit(0.0))
-                .when(~F.col("_has_addr"), F.lit(1.0))
-                .otherwise(F.coalesce(min_dist, F.lit(2.0))),
-            )
+            .withColumn("apenalty", ex["pc_penalty"])
             .drop("_qpcs", "_has_addr", "_cents")
         )
 
@@ -1214,86 +1408,10 @@ def score_hits(
     # FILTER over the checkpointed candidate set — no join back to the
     # parse output (saved one shuffle join + one anti-join over the
     # biggest intermediate; plan diff in plans/r06/).
-    street_cand = cand.filter(F.col("hnr").isNotNull()).filter(
-        F.col("rank_search").between(26, 27)
-    )
-    # one row per (house, housenumber): clean_housenumbers splits "2;4;6"
-    # lists, so a house matches any of its numbers
-    if "housenumbers" in idx.search_name.columns:
-        houses = idx.search_name.filter(F.size("housenumbers") > 0).select(
-            F.col("parent_place_id").alias("street_id"),
-            F.col("place_id").alias("house_id"),
-            F.explode("housenumbers").alias("h_hnr"),
-            F.col("lon").alias("h_lon"),
-            F.col("lat").alias("h_lat"),
-            F.col("osm_type").alias("h_osm_type"),
-            F.col("osm_id").alias("h_osm_id"),
-        )
-    else:
-        houses = idx.search_name.filter(F.col("housenumber").isNotNull()).select(
-            F.col("parent_place_id").alias("street_id"),
-            F.col("place_id").alias("house_id"),
-            F.col("housenumber").alias("h_hnr"),
-            F.col("lon").alias("h_lon"),
-            F.col("lat").alias("h_lat"),
-            F.col("osm_type").alias("h_osm_type"),
-            F.col("osm_id").alias("h_osm_id"),
-        )
+    street_cand = cand.filter(ex["street"])
     house_hits = street_cand.join(
-        houses,
-        (street_cand.place_id == houses.street_id)
-        & (street_cand.hnr == houses.h_hnr),
-    ).select(
-        "query_id",
-        "assign_id",
-        F.col("house_id").alias("place_id"),
-        F.col("h_osm_type").alias("osm_type"),
-        F.col("h_osm_id").alias("osm_id"),
-        F.lit("building").alias("class"),
-        F.lit("yes").alias("type"),
-        F.lit(30).alias("rank_search"),
-        F.lit(30).alias("rank_address"),
-        F.lit(0.0).alias("importance"),
-        F.col("h_lon").alias("lon"),
-        F.col("h_lat").alias("lat"),
-        F.col("hnr").alias("housenumber"),
-        F.col("apenalty").alias("penalty"),
-        F.lit(0.0).alias("text_dist"),
-    )
-
-    interp_hits = None
-    if osmline is not None:
-        lines = osmline.select(
-            F.col("parent_place_id").alias("street_id"),
-            F.col("osmline_id"),
-            "startnumber", "endnumber", "step", "mid_lon", "mid_lat",
-        )
-        interp_hits = (
-            street_cand.withColumn("hnr_num", F.col("hnr").cast("int"))
-            .join(lines, street_cand.place_id == lines.street_id)
-            .filter(
-                (F.col("hnr_num") >= F.col("startnumber"))
-                & (F.col("hnr_num") <= F.col("endnumber"))
-                & ((F.col("hnr_num") - F.col("startnumber")) % F.col("step") == 0)
-            )
-            .select(
-                "query_id",
-                "assign_id",
-                F.col("osmline_id").alias("place_id"),
-                F.lit("W").alias("osm_type"),
-                F.col("osmline_id").alias("osm_id"),
-                F.lit("place").alias("class"),
-                F.lit("houses").alias("type"),
-                F.lit(30).alias("rank_search"),
-                F.lit(30).alias("rank_address"),
-                F.lit(-0.1).alias("importance"),  # below exact house matches
-                F.col("mid_lon").alias("lon"),
-                F.col("mid_lat").alias("lat"),
-                F.col("hnr").alias("housenumber"),
-                (F.lit(1.0) + F.col("apenalty")).alias("penalty"),
-                F.lit(0.0).alias("text_dist"),
-            )
-        )
+        _memo(idx.search_name, "houses", _houses), ex["house_on"],
+    ).select(*ex["house"])
 
     # queries WITHOUT housenumber: plain candidates with a fuzzy text-
     # distance rerank term playing the role of the reference's difflib
@@ -1304,92 +1422,38 @@ def score_hits(
     # JVM-side (built-in, codegen) — a difflib pandas UDF measured +11s on
     # the 100k-page flagship; both are edit-distance rerankers and the
     # candidates already share every query token.
-    text_dist = F.round(
-        F.levenshtein("name_norm", "norm_name")
-        / F.greatest(F.length("name_norm"), F.length("norm_name"), F.lit(1)),
-        6,
-    )
-    plain = (
-        cand.filter(F.col("hnr").isNull())
-        .withColumn(
-            "text_dist",
-            F.when(
-                F.col("name_norm").isNull() | F.col("norm_name").isNull(),
-                F.lit(1.0),
-            ).otherwise(text_dist),
-        )
-        .select(
-            "query_id", "assign_id", "place_id", "osm_type", "osm_id",
-            "class", "type", "rank_search", "rank_address", "importance",
-            "lon", "lat",
-            F.lit(None).cast("string").alias("housenumber"),
-            F.col("apenalty").alias("penalty"),
-            "text_dist",
-        )
-    )
+    plain = cand.filter(ex["plain_rows"]).select(*ex["plain"])
     # hnr queries where no house/interp matched: fall back to the street
-    street_fallback = street_cand.select(
-        "query_id", "assign_id", "place_id", "osm_type", "osm_id", "class",
-        "type", "rank_search", "rank_address", "importance", "lon", "lat",
-        F.lit(None).cast("string").alias("housenumber"),
-        (F.lit(2.0) + F.col("apenalty")).alias("penalty"),
-        F.lit(0.0).alias("text_dist"),
-    )
+    street_fallback = street_cand.select(*ex["fallback"])
 
     all_hits = plain.unionByName(house_hits).unionByName(street_fallback)
-    if interp_hits is not None:
-        all_hits = all_hits.unionByName(interp_hits)
+    if osmline is not None:
+        lines = _memo(osmline, "lines", lambda o: o.select(
+            F.col("parent_place_id").alias("street_id"), "osmline_id",
+            "startnumber", "endnumber", "step", "mid_lon", "mid_lat"))
+        all_hits = all_hits.unionByName(
+            street_cand.join(lines, ex["line_on"]).filter(ex["in_range"])
+            .select(*ex["interp"]))
 
     # ---- postcode lane (PostcodeSearch, db_searches/postcode_search.py):
-    # postcode-role assignments resolve against the postcode table
-    if postcodes is not None and countries:
-        postcodes = postcodes.filter(
-            F.lower(F.col("country_code")).isin(
-                [c.lower() for c in countries]))
+    # postcode-role assignments resolve against the postcode table; only
+    # name-less assignments become a PostcodeSearch — with a name present
+    # the postcode acts as a candidate penalty instead (see the
+    # PlaceSearch block above; build_special_search:137-151)
     if postcodes is not None:
-        # only name-less assignments become a PostcodeSearch — with a name
-        # present the postcode acts as a candidate penalty instead (see
-        # the PlaceSearch block above; build_special_search:137-151)
-        # one PostcodeSearch per country reading (the reference emits one
-        # per outcode in the parsed set, postcode_parser.py:85-110) —
-        # '45325' resolves against both the identity and '453 25' rows
-        qp = q.filter(
-            F.col("postcode").isNotNull() & (F.col("name_norm") == "")
-        ).select(
-            "query_id", "assign_id",
-            F.explode(F.col("pc_all") if "pc_all" in q.columns
-                      else F.array("postcode")).alias("postcode"),
-            "apenalty",
-        )
-        pc = postcodes.select(
+        pc = _memo(postcodes, "pc", lambda p: p.select(
             F.upper(F.col("postcode")).alias("postcode"),
             F.col("country_code").alias("pc_cc"),
             F.col("lon").alias("pc_lon"), F.col("lat").alias("pc_lat"),
             F.col("rank_search").alias("pc_rs"),
             F.col("rank_address").alias("pc_ra"),
-        )
-        pc_hits = qp.withColumn("postcode", F.upper("postcode")).join(
-            pc, "postcode"
-        ).select(
-            "query_id",
-            "assign_id",
-            # postcodes live outside the placex id space: namespace bit 3
-            # like osmline, but negative to stay disjoint from it as well
-            (-F.abs(F.xxhash64("pc_cc", "postcode"))).alias("place_id"),
-            F.lit("P").alias("osm_type"),
-            F.lit(None).cast("long").alias("osm_id"),
-            F.lit("place").alias("class"),
-            F.lit("postcode").alias("type"),
-            F.col("pc_rs").cast("int").alias("rank_search"),
-            F.col("pc_ra").cast("int").alias("rank_address"),
-            F.lit(0.0).alias("importance"),
-            F.col("pc_lon").alias("lon"),
-            F.col("pc_lat").alias("lat"),
-            F.lit(None).cast("string").alias("housenumber"),
-            F.col("apenalty").alias("penalty"),
-            F.lit(0.0).alias("text_dist"),
-        )
-        all_hits = all_hits.unionByName(pc_hits)
+        ))
+        if countries:
+            pc = pc.filter(F.lower(F.col("pc_cc")).isin(
+                [c.lower() for c in countries]))
+        all_hits = all_hits.unionByName(
+            q.filter(ex["pc_only"]).select(*ex["qp"]).join(pc, "postcode")
+            .select(*ex["pc_hit"]))
 
     # unbounded viewbox: results outside the box survive but carry a
     # penalty (db_searches/base.py viewbox handling)
@@ -1410,65 +1474,20 @@ def score_hits(
     # disk-cell join — never an all-pairs product).  Category-only
     # assignments become a PoiSearch, valid only with a bounded viewbox
     # (build_poi_search:121-128).  The flagship path short-circuits on
-    # the single batched metadata probe taken right after the parse.
-    nk = q.filter(
-        F.col("near_key").isNotNull() & (F.col("name_norm") != "")
-    ).select("query_id", "assign_id", "near_key")
-    qpoi = q.filter(
-        F.col("near_key").isNotNull() & (F.col("name_norm") == "")
-    ).select("query_id", "assign_id", "near_key", "apenalty")
-    has_poi = viewbox is not None and bounded_viewbox and has_poi
-    if has_near or has_poi:
+    # the lane flags the parse reported.
+    has_poi = viewbox is not None and bounded_viewbox and lanes & _POI
+    if lanes & _NEAR or has_poi:
+        cats = _memo(idx.placex, ("cats", tuple(countries or ())),
+                     lambda px: _categories(px, countries))
+    if lanes & _NEAR:
         from nominatim_spark.operators.spatial import within_distance_join
 
-        px = idx.placex
-        if "linked_place_id" in px.columns:
-            px = px.filter(F.col("linked_place_id").isNull())
-        if countries:
-            px = px.filter(F.lower(F.col("country_code")).isin(
-                [c.lower() for c in countries]))
-        cats = px.select(
-            F.col("place_id").alias("c_pid"),
-            F.col("osm_type").alias("c_ot"), F.col("osm_id").alias("c_oid"),
-            F.col("class").alias("c_cls"), F.col("type").alias("c_typ"),
-            F.col("rank_search").alias("c_rs"),
-            F.col("rank_address").alias("c_ra"),
-            F.coalesce(F.col("importance"), F.lit(0.0)).alias("c_imp"),
-            F.col("lon").alias("c_lon"), F.col("lat").alias("c_lat"),
-            F.concat_ws("|", "class", "type").alias("c_key"),
-        )
-
-        def _cat_hit_cols(pen_col, id_col="c_pid"):
-            return [
-                "query_id", "assign_id",
-                F.col(id_col).alias("place_id"),
-                F.col("c_ot").alias("osm_type"),
-                F.col("c_oid").alias("osm_id"),
-                F.col("c_cls").alias("class"), F.col("c_typ").alias("type"),
-                F.col("c_rs").alias("rank_search"),
-                F.col("c_ra").alias("rank_address"),
-                F.col("c_imp").alias("importance"),
-                F.col("c_lon").alias("lon"), F.col("c_lat").alias("lat"),
-                F.lit(None).cast("string").alias("housenumber"),
-                pen_col.alias("penalty"),
-                F.lit(0.0).alias("text_dist"),
-            ]
-
-    if has_near:
+        nk = q.filter(ex["near_rows"]).select(
+            "query_id", "assign_id", "near_key")
         anchors = (
             all_hits.join(nk, ["query_id", "assign_id"])
             .groupBy("query_id", "assign_id", "near_key")
-            .agg(F.expr(
-                "min_by(struct(lon, lat, penalty), "
-                "struct(penalty, text_dist, -importance, place_id))"
-            ).alias("_a"))
-            .select(
-                "query_id", "assign_id", "near_key",
-                F.concat_ws("#", F.col("query_id").cast("string"),
-                            F.col("assign_id").cast("string")).alias("_akey"),
-                F.col("_a.lon").alias("lon"), F.col("_a.lat").alias("lat"),
-                F.col("_a.penalty").alias("a_pen"),
-            )
+            .agg(ex["anchor"]).select(*ex["anchor_cols"])
         )
         near_cats = cats.join(
             F.broadcast(
@@ -1493,7 +1512,7 @@ def score_hits(
         near_hits = (
             nh.withColumn("_rn", F.row_number().over(wn))
             .filter("_rn = 1")
-            .select(*_cat_hit_cols(F.col("a_pen"), id_col="cand_id"))
+            .select(*ex["near"])
         )
         all_hits = all_hits.join(
             nk.select("query_id", "assign_id"),
@@ -1501,18 +1520,17 @@ def score_hits(
         ).unionByName(near_hits)
     if has_poi:
         vx0, vy0, vx1, vy1 = viewbox
-        poi_hits = (
-            qpoi.join(cats.withColumnRenamed("c_key", "near_key"),
-                      "near_key")
+        all_hits = all_hits.unionByName(
+            q.filter(ex["poi_rows"])
+            .select("query_id", "assign_id", "near_key", "apenalty")
+            .join(cats.withColumnRenamed("c_key", "near_key"), "near_key")
             .filter(F.col("c_lon").between(vx0, vx1)
                     & F.col("c_lat").between(vy0, vy1))
-            .select(*_cat_hit_cols(F.col("apenalty")))
-        )
-        all_hits = all_hits.unionByName(poi_hits)
+            .select(*ex["poi"]))
 
     # penalty already folds the assignment penalty (weigh_search analog:
     # the cheapest assignment whose lanes matched wins, ranking.sql:327-345)
-    return all_hits.drop("assign_id")
+    return ids, all_hits.select(*ex["out"])
 
 
 def geocode(spark, idx: IndexTables, queries: DataFrame, **kw) -> DataFrame:
@@ -1523,62 +1541,26 @@ def geocode(spark, idx: IndexTables, queries: DataFrame, **kw) -> DataFrame:
     ``query_id`` that appears with several texts (a page with several
     address mentions) gets one row per text, so no mention is dropped.
 
-    The call is eager: it runs the upstream ``queries`` plan, and the
-    parse, plan and candidate stages of :func:`score_hits`, before it
-    returns.  The returned frame holds the remaining work.
+    The call is eager: before it returns, it runs three jobs with their
+    sub-jobs (AQE shuffle stages, broadcasts), each a ``localCheckpoint``
+    in :func:`score_hits` — the parse, which reads the upstream
+    ``queries`` plan and runs the Python parse in one stage; the plan;
+    and the candidate set.  The first call on a word table also counts
+    its rows once.  The returned frame holds the remaining work: the
+    lanes, the ranking and the attach join.
 
     Final ranking: lowest penalty, then importance desc, then stable id.
     min_by over an orderable struct = one hash aggregation (with map-side
     partial) instead of a sort + window — cheaper by a full sort and
     deterministic because (penalty, text_dist, -importance, place_id)
-    ends in the unique place_id.  See score_hits for the lane DAG and the
-    search knobs.
-
-    The whole pipeline runs per DISTINCT query text, and the per-text
-    best is joined back to the query ids at the end (guide §8: decide on
-    the small proxy, attach the decision once).  Geocoding is a pure
-    function of the text — every search knob is batch-global — so the
-    results are identical, while a crawl workload, which mentions the
-    same address on many pages, pays the parse/plan/candidate machinery
-    once per distinct string instead of once per page.  Fully-unique
-    batches pay one extra exchange of the (short) text column.
+    ends in the unique place_id.  See score_hits for the lane DAG, the
+    per-distinct-text evaluation and the search knobs.
     """
-    text_col = kw.get("text_col", "qtext")
-    # materialize the (id, text) projection once: both the distinct and
-    # the final attach join read it, so an expensive upstream (e.g. the
-    # page-extraction mapInPandas) runs exactly once
-    qsel = (
-        queries.select("query_id", F.col(text_col).alias("_qtext"))
-        .filter(F.col("_qtext").isNotNull())
-        .localCheckpoint(eager=True)
-    )
-    # right-size the two consumers below from the MEASURED batch size:
-    # they do trivial per-row work (hash, broadcast-probe), so ~1M rows
-    # per task (the guide's ~100 MB partition band for short rows) is
-    # plenty, and fewer map tasks shrink the (map x reduce) shuffle
-    # block grid that dominates small batches (guide §2.2).  The count
-    # is a cheap job over the checkpoint leaf; the target grows linearly
-    # with the batch, so huge batches keep full parallelism.
-    n_queries = qsel.count()
-    target = max(1, min(-(-n_queries // 1_000_000),
-                        qsel.rdd.getNumPartitions()))
-    if target < qsel.rdd.getNumPartitions():
-        qsel = qsel.coalesce(target)
-    uniq = (
-        qsel.select(F.col("_qtext").alias(text_col))
-        .dropDuplicates([text_col])
-        .withColumn("query_id", F.col(text_col))
-    )
-    all_hits = score_hits(spark, idx, uniq, **kw)
-    val_cols = [c for c in all_hits.columns if c != "query_id"]
-    best = all_hits.groupBy("query_id").agg(
-        F.expr(
-            "min_by(struct(" + ", ".join(val_cols) + "), "
-            "struct(penalty, text_dist, -importance, place_id))"
-        ).alias("_best")
-    )
-    per_text = best.select(F.col("query_id").alias("_qtext"), "_best.*")
-    return qsel.join(per_text, "_qtext").drop("_qtext")
+    ids, hits = score_hits(spark, idx, queries, **kw)
+    best = hits.groupBy("_qtext").agg(
+        _search_exprs(spark, kw.get("text_col", "qtext"))["best"])
+    return ids.join(best.select("_qtext", "_best.*"), "_qtext") \
+        .drop("_qtext")
 
 
 STRUCTURED_FIELDS = ("amenity", "street", "city", "county", "state",
@@ -1626,7 +1608,8 @@ def geocode_all(spark, idx: IndexTables, queries: DataFrame, *,
     pass (geocoder.py:213-248) over the final list — byte-parity word
     matching via an Arrow-batched UDF that only ever sees the top-k rows
     (see :mod:`nominatim_spark.pipeline.rerank`)."""
-    all_hits = score_hits(spark, idx, queries, **kw)
+    ids, hits = score_hits(spark, idx, queries, **kw)
+    all_hits = ids.join(hits, "_qtext").drop("_qtext")
     # a place can match through several assignments: keep its best row
     wp = Window.partitionBy("query_id", "place_id").orderBy(
         "penalty", "text_dist"

@@ -6,6 +6,8 @@ Scenario shapes mirror the reference's db/import BDD features
 interpolation}.feature) and the api search/reverse tests.
 """
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -139,6 +141,110 @@ def test_geocode_row_per_text_and_null_text(spark, index):
     rows = geocode(spark, idx, q, osmline=osmline).collect()
     assert sorted((r.query_id, r.osm_type, r.osm_id) for r in rows) == [
         ("page", "N", 100000), ("page", "N", 2000002)]
+
+
+def _answers(rows):
+    return {r.query_id: (r.osm_type, r.osm_id, r["class"], r.housenumber,
+                         round(r.penalty, 6)) for r in rows}
+
+
+def test_geocode_mixed_lane_flags_match_single_texts(spark, index):
+    """One batch whose texts each need a different conditional lane
+    (postcode plus name, category near, qualifier, split direction)
+    answers every text as geocoding it alone does: the lane flags the
+    parse reports are merged over all its tasks, so no lane is skipped.
+    Each text's answer depends on its lane."""
+    from nominatim_spark.pipeline.postcodes import build_postcodes
+
+    idx, osmline = index
+    street, city = synth.street_name(0, 0), synth.city_name(0)
+    texts = {
+        "pc_name": f"{street}, 47001",
+        "near": f"restaurant near {street}, {city}",
+        "qual": f"restaurant {city}",
+        "split": f"{city} {synth.street_name(0, 1)}",
+        "plain": f"{street} 5, {city}",
+    }
+    # street 1 of city 0 excluded: the split text then resolves through
+    # its forward reading (a cafe on that street), which the direction
+    # penalty charges
+    kw = dict(osmline=osmline, postcodes=build_postcodes(spark, idx.placex),
+              near_radius_deg=0.1, excluded_place_ids=[10001 * 4 + 1])
+
+    def run(items):
+        q = spark.createDataFrame(items, "query_id string, qtext string")
+        return _answers(geocode(spark, idx, q, **kw).collect())
+
+    alone = {}
+    for k, t in texts.items():
+        alone.update(run([(k, t)]))
+    assert set(alone) == set(texts)
+    # another city's postcode and no address terms: a flat 1.0
+    assert alone["pc_name"][:2] == ("W", 10000)
+    assert alone["pc_name"][-1] == 1.0
+    assert alone["near"][:2] == ("N", 100001)   # not the anchor street
+    assert alone["qual"][2] == "amenity"        # not the city
+    assert alone["split"][:2] == ("N", 100001)
+    assert alone["split"][-1] > 0.3 + 1e-6      # split 0.1 + name rank 0.2
+    assert run(list(texts.items())) == alone
+
+
+def test_geocode_job_count_and_single_input_read(spark, index):
+    """A single-text search runs at most 15 Spark jobs, and reads a
+    Python-backed input once (the parse job is its only reader)."""
+    from pyspark.sql.types import StringType
+
+    idx, _ = index
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+
+    def count_read(text):
+        reads.add(1)
+        return text
+
+    counted = F.udf(count_read, StringType()).asNondeterministic()
+    q = spark.createDataFrame(
+        [("q0", f"{synth.street_name(0, 0)} 5, {synth.city_name(0)}")],
+        "query_id string, qtext string",
+    ).withColumn("qtext", counted("qtext"))
+    geocode(spark, idx, q.limit(1)).collect()  # warm the index-side memos
+    reads.value = 0
+    sc.setJobGroup("geocode_one", "geocode_one")
+    try:
+        rows = geocode(spark, idx, q).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [(r.osm_type, r.osm_id) for r in rows] == [("N", 2000002)]
+    assert reads.value == 1
+    time.sleep(1.0)  # the status tracker is fed asynchronously
+    jobs = len(sc.statusTracker().getJobIdsForGroup("geocode_one"))
+    assert 0 < jobs <= 15, jobs
+
+
+def test_geocode_duplicate_rows_keep_their_rows(spark, index):
+    """Repeated (query_id, text) rows, within one Arrow batch and across
+    partitions, each get their own output row, with the answer the text
+    gets alone (penalty included: a text parsed in two batches must not
+    count its tokens twice)."""
+    idx, osmline = index
+    a = f"{synth.street_name(0, 0)} 5, {synth.city_name(0)}"
+    # a partial-name match, whose penalty depends on its token count
+    b = f"{synth.poi_name(0, 0).split()[1]} {synth.city_name(0)}"
+
+    def run(q):
+        return sorted((r.query_id, r.osm_type, r.osm_id, round(r.penalty, 6))
+                      for r in geocode(spark, idx, q, osmline=osmline)
+                      .collect())
+
+    schema = "query_id string, qtext string"
+    want = {t: run(spark.createDataFrame([("_", t)], schema))[0][1:]
+            for t in (a, b)}
+    assert want[b][:2] == ("N", 100000)
+    rows = [("x", a), ("x", a), ("y", a), ("z", b), ("x", a), ("z", b),
+            ("w", b), ("x", a)]
+    q = spark.createDataFrame(rows, schema)
+    for src in (q, q.repartition(3)):
+        assert run(src) == sorted((k, *want[t]) for k, t in rows)
 
 
 def test_osmline_parity_normalization(index):
