@@ -148,6 +148,7 @@ def cmd_import(args) -> int:
 
 def cmd_search(args) -> int:
     from nominatim_spark.pipeline.search import geocode
+    from nominatim_spark.session import local_rows
 
     spark = _get_spark(args)
     idx, osmline, tiger = _load_index(spark, args)
@@ -156,10 +157,8 @@ def cmd_search(args) -> int:
         # picks them up like OSM interpolations (tiger_data.py end state)
         osmline = (tiger if osmline is None
                    else osmline.select(tiger.columns).unionByName(tiger))
-    q = spark.createDataFrame(
-        [(str(i), t) for i, t in enumerate(args.query)],
-        "query_id string, qtext string",
-    )
+    q = local_rows(spark, [(str(i), t) for i, t in enumerate(args.query)],
+                   "query_id string, qtext string")
     res = geocode(spark, idx, q, osmline=osmline)
     _print_rows(res, args.format, idx,
                 addressdetails=getattr(args, 'addressdetails', False))
@@ -168,12 +167,12 @@ def cmd_search(args) -> int:
 
 def cmd_reverse(args) -> int:
     from nominatim_spark.pipeline.reverse import reverse_geocode
+    from nominatim_spark.session import local_rows
 
     spark = _get_spark(args)
     idx, osmline, tiger = _load_index(spark, args)
-    pts = spark.createDataFrame(
-        [(0, args.lon, args.lat)], "point_id long, lon double, lat double"
-    )
+    pts = local_rows(spark, [(0, args.lon, args.lat)],
+                     "point_id long, lon double, lat double")
     res = reverse_geocode(spark, idx, pts, osmline=osmline, tiger=tiger)
     _print_rows(res, args.format, idx,
                 addressdetails=getattr(args, 'addressdetails', False))

@@ -16,6 +16,7 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from nominatim_spark.pipeline.placex import IndexTables
+from nominatim_spark.session import local_rows
 
 _PLACEX_COLS = [
     "place_id", "osm_type", "osm_id", "class", "type", "rank_search",
@@ -48,9 +49,9 @@ def _norm_refs(spark, refs) -> DataFrame:
             raise ValueError(
                 f"bad place ref {r!r}: expected a numeric place id or "
                 "N/W/R-prefixed osm id (e.g. 'N123')")
-    return spark.createDataFrame(
-        rows, "ref_id string, place_id long, osm_type string, osm_id long"
-    )
+    return local_rows(
+        spark, rows,
+        "ref_id string, place_id long, osm_type string, osm_id long")
 
 
 def lookup_places(spark, idx: IndexTables, refs,

@@ -4,13 +4,20 @@ Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same settings are
 what we would pass to ``spark-submit`` on a real cluster (AQE on, skew-join
 on, Arrow on). Shuffle partitioning is sized from the parallelism level so
 the plan scales with cluster size instead of a hard-coded 200.
+
+Python workers fork from the engine's daemon (``nominatim_spark.pydaemon``),
+which spares every Python task PySpark's ~150-200 ms re-read of
+``pyspark.zip``; like the engine's pickled UDFs, it needs ``nominatim_spark``
+importable in the worker (the JVM's working directory or ``PYTHONPATH``).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 
 def get_spark(
@@ -67,6 +74,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
                 str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "nominatim_spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -74,12 +82,32 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     # both warm-ups pay for themselves in perfbench (4-vCPU host,
     # local[2]): without either, crawl_pages throughput fell ~17% and
-    # api_requests p50 rose ~22%; without the worker prewarm alone,
-    # api_requests p50 rose ~12%.  Skipping both saves ~10 s of session
-    # start, but most of it reappears in the first real jobs.
+    # api_requests p50 rose ~22%.  Re-measured once the daemon made a
+    # Python task cheap, without the worker prewarm alone (median of 4
+    # pairs): crawl_pages throughput fell 13% and p50 rose 13%, while
+    # api_requests throughput rose 4% and p50 fell 3%, within noise.
     _prewarm_python_workers(spark)
     _warm_engine_kernels(spark)
     return spark
+
+
+def local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A few driver-side rows (tuples in ``schema``'s DDL column order) as
+    a JVM-side relation: literal structs through ``inline``.
+
+    ``spark.createDataFrame(rows)`` parallelizes pickled rows, so every
+    read of it runs a Python task just to unpickle them; this plan has
+    no Python in it.  Meant for request-sized inputs (each value is one
+    literal in the plan), not for data.
+    """
+    st = StructType.fromDDL(schema)
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                   for v, f in zip(row, st.fields)])
+        for row in rows
+    ]
+    arr = F.array(*structs) if structs else F.array().cast(ArrayType(st))
+    return spark.range(1, numPartitions=1).select(F.inline(arr))
 
 
 def _prewarm_python_workers(spark: SparkSession) -> None:
@@ -132,7 +160,6 @@ def _warm_engine_kernels(spark: SparkSession) -> None:
         return
     try:
         from pyspark.sql import Window
-        from pyspark.sql import functions as F
 
         par = spark.sparkContext.defaultParallelism
         sc = spark.sparkContext

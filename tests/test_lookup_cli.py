@@ -212,3 +212,27 @@ def test_geocodejson_addressdetails(spark, index, capsys):
     doc = json.loads(capsys.readouterr().out.strip())
     g = doc["features"][0]["properties"]["geocoding"]
     assert "city" not in g and "admin" not in g
+
+
+def test_lookup_refs_are_a_jvm_relation(spark, index):
+    """The ref table is built from literals, not parallelized pickles: no
+    Python-backed scan in the plan; an empty ref list answers no rows
+    with the same columns."""
+    idx, osmline, _ = index
+    street_pid = idx.placex.filter("osm_id = 10000 AND osm_type = 'W'") \
+                           .head().place_id
+    res = lookup_places(spark, idx, ["N999999999", str(street_pid)],
+                        osmline=osmline)
+    plan = res._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    # leaves only: a cached index table's own lineage is not this call's
+    leaves = plan.collectLeaves()
+    scans = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+    assert scans and not any("ExistingRDD" in n or "PythonRDD" in n
+                             for n in scans), scans
+    assert [r.ref_id for r in res.collect()] == [str(street_pid)]
+
+    empty = lookup_places(spark, idx, [], osmline=osmline)
+    assert empty.columns == res.columns
+    assert empty.collect() == []
