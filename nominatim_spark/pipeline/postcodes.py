@@ -24,6 +24,7 @@ import re
 from pyspark.sql import DataFrame, functions as F
 
 from nominatim_spark.grid import EARTH_DEG_M
+from nominatim_spark.session import local_rows
 
 # Per-country postcode formats — the reference's full pattern table
 # (settings/country_settings.yaml `postcode:` entries; public postal
@@ -237,8 +238,8 @@ def jvm_postcode_rules() -> list[tuple[str, str, str]]:
 
 def postcode_dim(spark) -> DataFrame:
     """Broadcastable (country_code, _pc_rx, _pc_out) dimension."""
-    return spark.createDataFrame(
-        jvm_postcode_rules(),
+    return local_rows(
+        spark, jvm_postcode_rules(),
         "country_code string, _pc_rx string, _pc_out string",
     )
 

@@ -22,7 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nominatim_spark.pipeline.address_levels import levels_pdf
+from nominatim_spark.pipeline.address_levels import (
+    COUNTRY_LEVELS, DEFAULT_LEVELS)
+from nominatim_spark.session import local_rows
 
 
 def backfill_categories(df: DataFrame, class_col: str = "class",
@@ -68,7 +70,10 @@ def compute_place_rank(
     type (placex_triggers.sql:862-868).  Returns ``key`` + the two ranks.
     """
     spark = df.sparkSession
-    levels = spark.createDataFrame(levels_pdf())
+    levels = local_rows(
+        spark, DEFAULT_LEVELS + COUNTRY_LEVELS,
+        "lv_country string, lv_class string, lv_type string, "
+        "lv_search long, lv_address long")
 
     base = df.select(
         key,

@@ -5,19 +5,52 @@ what we would pass to ``spark-submit`` on a real cluster (AQE on, skew-join
 on, Arrow on). Shuffle partitioning is sized from the parallelism level so
 the plan scales with cluster size instead of a hard-coded 200.
 
+Two more fixed engine settings cut the fixed cost of every request:
+
+* ``spark.sql.codegen.cache.maxEntries`` holds every class the engine's
+  requests generate, so a warm request compiles none (at Spark's default of
+  100 entries, requests evicted each other's classes and each warm search
+  recompiled ~50 of them with Janino);
+* ``spark.python.unix.domain.socket.enabled`` runs the JVM <-> Python
+  channels over Unix sockets: over loopback TCP without ``TCP_NODELAY``
+  each Python task waited out Linux's 40 ms delayed ACK.  In this mode
+  Python workers skip their secret handshake, so the sockets live in a
+  directory only this user can enter (mode 0700, removed at exit).
+
 Python workers fork from the engine's daemon (``nominatim_spark.pydaemon``),
 which spares every Python task PySpark's ~150-200 ms re-read of
-``pyspark.zip``; like the engine's pickled UDFs, it needs ``nominatim_spark``
-importable in the worker (the JVM's working directory or ``PYTHONPATH``).
+``pyspark.zip``.  The package's parent directory is put on the workers'
+``PYTHONPATH``, and a worker that cannot start makes ``get_spark`` raise.
 """
 
 from __future__ import annotations
 
+import atexit
+import json
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StructType
+
+DAEMON_MODULE = "nominatim_spark.pydaemon"
+# the directory holding the ``nominatim_spark`` package, for the workers
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Distinct classes the engine generates, counted as CodegenMetrics
+# compiles with a 100,000-entry cache (perfbench, 4-vCPU host, local[2]):
+# an api_requests session 173, a crawl_pages session 171, one index build
+# 928.  1,000 keeps warm requests at 0 compiles with ~6x headroom; at
+# Spark's default of 100 each warm search recompiled 50-54 classes and an
+# api_requests session compiled 1,114.
+CODEGEN_CACHE_ENTRIES = 1000
+
+# PySpark names each socket ``<dir>/.<uuid4>.sock`` (daemon.py, context.py)
+_SOCKET_NAME_LEN = len("/.") + 36 + len(".sock")
+_SUN_PATH_MAX = 107  # sockaddr_un.sun_path: 108 bytes with the closing NUL
+_socket_dir: str | None = None
 
 
 def get_spark(
@@ -45,6 +78,9 @@ def get_spark(
         # data-volume-driven sizing comes from
         # advisoryPartitionSizeInBytes, not this floor.
         shuffle_partitions = max(cpus, 8)
+    sock_dir = ((extra_conf or {}).get("spark.python.unix.domain.socket.dir")
+                or _private_socket_dir())
+    check_socket_dir(sock_dir)
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -74,72 +110,81 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
                 str(64 * 1024 * 1024))
-        .config("spark.python.daemon.module", "nominatim_spark.pydaemon")
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", sock_dir)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # both warm-ups pay for themselves in perfbench (4-vCPU host,
-    # local[2]): without either, crawl_pages throughput fell ~17% and
-    # api_requests p50 rose ~22%.  Re-measured once the daemon made a
-    # Python task cheap, without the worker prewarm alone (median of 4
-    # pairs): crawl_pages throughput fell 13% and p50 rose 13%, while
-    # api_requests throughput rose 4% and p50 fell 3%, within noise.
-    _prewarm_python_workers(spark)
+    # The kernel warm-up pays for itself in perfbench (4-vCPU host,
+    # local[2]): without it and the former worker prewarm, crawl_pages
+    # throughput fell ~17% and api_requests p50 rose ~22%.  Prewarming a
+    # Python worker per core stopped paying once tasks ran over Unix
+    # sockets: without it (2 pairs per workload) crawl_pages throughput
+    # rose 2-4% and setup_s fell ~1.2 s; api_requests moved within +-4%.
+    _check_python_workers(spark)
     _warm_engine_kernels(spark)
     return spark
 
 
+def _private_socket_dir() -> str:
+    """This process's directory for the JVM <-> Python Unix sockets: made
+    once under ``/tmp`` (``$TMPDIR`` may be too long for a socket path),
+    mode 0700, removed at exit."""
+    global _socket_dir
+    if _socket_dir is None:
+        d = tempfile.mkdtemp(prefix="nspark-", dir="/tmp")
+        atexit.register(shutil.rmtree, d, True)
+        _socket_dir = d
+    return _socket_dir
+
+
+def check_socket_dir(d: str) -> None:
+    """Raise ``ValueError`` when sockets in ``d`` would not fit
+    ``sun_path``: every Python task would then fail to connect."""
+    n = len(os.fsencode(d)) + _SOCKET_NAME_LEN
+    if n > _SUN_PATH_MAX:
+        raise ValueError(
+            f"Unix socket directory {d!r} is too long: its socket paths "
+            f"take {n} bytes, sun_path holds {_SUN_PATH_MAX}")
+
+
 def local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """A few driver-side rows (tuples in ``schema``'s DDL column order) as
-    a JVM-side relation: literal structs through ``inline``.
+    """Driver-side rows (tuples in ``schema``'s DDL column order) as a
+    JVM-side relation: one JSON string literal through ``from_json`` and
+    ``inline``.
 
     ``spark.createDataFrame(rows)`` parallelizes pickled rows, so every
     read of it runs a Python task just to unpickle them; this plan has
-    no Python in it.  Meant for request-sized inputs (each value is one
-    literal in the plan), not for data.
+    no Python in it.  Meant for request inputs and small constant
+    tables, not for data.
     """
     st = StructType.fromDDL(schema)
-    structs = [
-        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
-                   for v, f in zip(row, st.fields)])
-        for row in rows
-    ]
-    arr = F.array(*structs) if structs else F.array().cast(ArrayType(st))
-    return spark.range(1, numPartitions=1).select(F.inline(arr))
+    data = json.dumps([dict(zip(st.names, row)) for row in rows])
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.from_json(F.lit(data), ArrayType(st))))
 
 
-def _prewarm_python_workers(spark: SparkSession) -> None:
-    """Spin up the Python worker pool once, at session init.
-
-    The first pandas UDF / mapInPandas task in a session forks a worker
-    per core and each one imports numpy+pandas (~1.5 s serial, far worse
-    when all cores fork at once mid-query).  With worker reuse on (the
-    default) the pool persists, so paying the import storm here — inside
-    session construction, off every query's critical path — makes the
-    first vectorized-UDF query in any workload (bench, CLI, service)
-    run at steady-state speed.  Guide §4.5: heavyweight init once per
-    task; this is the once-per-*session* analog for the interpreter
-    itself.
-    """
-    if getattr(spark, "_nspark_prewarmed", False):
-        return
+def _check_python_workers(spark: SparkSession) -> None:
+    """Run one Python task, so that workers which cannot start fail the
+    session with the daemon module and path named, not its first query."""
+    sc = spark.sparkContext
+    sc.setJobDescription("session init: python worker check")
     try:
-        n = spark.sparkContext.defaultParallelism
-
-        def _touch(batches):
-            import numpy  # noqa: F401 — force the heavy imports now
-            import pandas  # noqa: F401
-
-            yield from batches
-
-        spark.sparkContext.setJobDescription("session init: python worker prewarm")
-        spark.range(0, n, 1, n).mapInPandas(_touch, "id long").count()
-        spark.sparkContext.setJobDescription(None)
-        spark._nspark_prewarmed = True
-    except Exception:  # noqa: BLE001 — prewarm is best-effort only
-        pass
+        spark.range(1, numPartitions=1).mapInPandas(
+            lambda batches: batches, "id long").count()
+    except Exception as e:
+        raise RuntimeError(
+            f"Python workers failed to start from the daemon module "
+            f"{DAEMON_MODULE} with {_PACKAGE_PARENT!r} on their path"
+        ) from e
+    finally:
+        sc.setJobDescription(None)
 
 
 def _warm_engine_kernels(spark: SparkSession) -> None:

@@ -236,3 +236,26 @@ def test_lookup_refs_are_a_jvm_relation(spark, index):
     empty = lookup_places(spark, idx, [], osmline=osmline)
     assert empty.columns == res.columns
     assert empty.collect() == []
+
+
+def _leaf_names(plan):
+    """Leaf node names of a physical plan, looking through adaptive
+    wrappers and into cached relations."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _leaf_names(plan.inputPlan())
+    if name == "InMemoryTableScan":
+        return _leaf_names(plan.relation().cachedPlan())
+    kids = plan.children()
+    if kids.isEmpty():
+        return [name]
+    return [n for i in range(kids.size()) for n in _leaf_names(kids.apply(i))]
+
+
+def test_cached_placex_plan_has_no_python_scan(spark, index):
+    """The postcode rules that tokenizing placex joins are a JVM relation:
+    computing the cached placex runs no Python task to unpickle them."""
+    idx, _, _ = index
+    leaves = _leaf_names(idx.placex._jdf.queryExecution().executedPlan())
+    assert leaves and not any("ExistingRDD" in n or "PythonRDD" in n
+                              for n in leaves), leaves

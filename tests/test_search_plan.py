@@ -151,3 +151,48 @@ def test_partial_dict_broadcast_is_batch_bounded(spark):
     want = {(r.query_id, r.assign_id): (r.drive_id, sorted(r.name_ids))
             for r in _plan_assignments(q, base).collect()}
     assert got == want and len(got) == 1
+
+
+def _kind_texts(city, street, house):
+    """One search text per kind of place text (house, house+postcode,
+    street, POI, city) in synthetic city ``city``."""
+    c = synth.city_name(city)
+    return [f"{synth.street_name(city, street)} {house}, {c}",
+            f"{synth.street_name(city, (street + 1) % 3)} {house}, "
+            f"47{city:03d} {c}",
+            f"{synth.street_name(city, (street + 2) % 3)}, {c}",
+            f"{synth.poi_name(city, 0)}, {c}",
+            f"{c}, {synth.COUNTRY_NAME}"]
+
+
+def test_warm_searches_compile_almost_nothing(spark, index):
+    """Once each kind of text has been searched in each city, further
+    searches of each kind reuse the session's generated classes: the
+    codegen cache holds the requests' working set.  At Spark's default of
+    100 entries every warm search recompiled ~50 classes.  The house and
+    street texts are new; this index has one POI and one city name per
+    city, so those repeat.  AQE re-plans as query stages finish, so a
+    search whose stages finish in another order can take a plan shape not
+    seen before and compile its 2-10 classes once; most searches compile
+    none, and all of them together fewer than one search did before."""
+    from nominatim_spark.session import local_rows
+
+    idx, osmline = index
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def search(text):
+        q = local_rows(spark, [("q0", text)], "query_id string, qtext string")
+        return geocode(spark, idx, q, osmline=osmline).collect()
+
+    for city in (0, 1):
+        for text in _kind_texts(city, 0, 1):
+            search(text)
+    compiled = []
+    for city in (0, 1):
+        for text in _kind_texts(city, 1, 3):
+            before = metrics.METRIC_COMPILATION_TIME().getCount()
+            assert search(text), text
+            compiled.append(metrics.METRIC_COMPILATION_TIME().getCount()
+                            - before)
+    assert sorted(compiled)[len(compiled) // 2] == 0, compiled
+    assert sum(compiled) < 50, compiled
